@@ -7,8 +7,12 @@ Reads <verifyOutDir>/oracle_sql.json (written by graft.Verify), runs each
 oracle SQL in DuckDB over views named after the fixture tables, and compares
 against the Spark result parquet in <verifyOutDir>/<name>/. Mimics the
 driver's compare: columns sorted by name, row-by-row value equality.
+
+Every PASS/FAIL line ends in `sha=<12 hex>`, a SHA-256 of the normalized,
+name-sorted Spark rows, so `diff` of two logs shows any result change
+between two builds even where both pass.
 """
-import sys, json, glob, math, datetime, decimal
+import sys, json, glob, math, datetime, decimal, hashlib
 
 import duckdb
 import pyarrow.parquet as pq
@@ -112,6 +116,11 @@ def rows_of(cols, names):
     return out, [names[i] for i in order]
 
 
+def digest(cols, rows):
+    """Short SHA-256 of the normalized Spark result (names, then rows)."""
+    return hashlib.sha256(repr((cols, rows)).encode()).hexdigest()[:12]
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
@@ -123,7 +132,7 @@ def main():
     for name in sorted(oracle):
         files = sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))
         if not files:
-            print(f"FAIL {name}: no spark output parquet")
+            print(f"FAIL {name}: no spark output parquet sha=-")
             n_fail += 1
             continue
         # read ALL part files in sorted filename order (preserves global
@@ -134,6 +143,7 @@ def main():
         s_rows, s_cols = rows_of([tbl.column(i).to_pylist()
                                   for i in range(tbl.num_columns)],
                                  list(tbl.schema.names))
+        sha = f"sha={digest(s_cols, s_rows)}"
         try:
             res = con.execute(oracle[name])
             d_names = [d[0] for d in res.description]
@@ -141,30 +151,32 @@ def main():
             d_cols = [[row[i] for row in d_data] for i in range(len(d_names))]
             d_rows, d_cols_sorted = rows_of(d_cols, d_names)
         except Exception as e:
-            print(f"FAIL {name}: oracle error: {e}")
+            print(f"FAIL {name}: oracle error: {e} {sha}")
             n_fail += 1
             continue
         if s_cols != d_cols_sorted:
-            print(f"FAIL {name}: columns spark={s_cols} duckdb={d_cols_sorted}")
+            print(f"FAIL {name}: columns spark={s_cols} "
+                  f"duckdb={d_cols_sorted} {sha}")
             n_fail += 1
             continue
         tbad = type_diff(con, oracle[name], tbl.schema)
         if tbad:
-            print(f"FAIL {name}: type drift: " + "; ".join(tbad))
+            print(f"FAIL {name}: type drift: " + "; ".join(tbad) + f" {sha}")
             n_fail += 1
             continue
         if len(s_rows) != len(d_rows):
-            print(f"FAIL {name}: rowcount spark={len(s_rows)} duckdb={len(d_rows)}")
+            print(f"FAIL {name}: rowcount spark={len(s_rows)} "
+                  f"duckdb={len(d_rows)} {sha}")
             n_fail += 1
             continue
         bad = [(i, a, b) for i, (a, b) in enumerate(zip(s_rows, d_rows)) if a != b]
         if bad:
             i, a, b = bad[0]
             print(f"FAIL {name}: {len(bad)}/{len(s_rows)} rows differ; "
-                  f"first at {i} cols={s_cols}\n  spark ={a}\n  duckdb={b}")
+                  f"first at {i} cols={s_cols} {sha}\n  spark ={a}\n  duckdb={b}")
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(s_rows)} rows)")
+            print(f"PASS {name} ({len(s_rows)} rows) {sha}")
             n_pass += 1
     print(f"== {n_pass} pass / {n_fail} fail ==")
     sys.exit(1 if n_fail else 0)

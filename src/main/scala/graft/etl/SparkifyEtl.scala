@@ -75,7 +75,9 @@ object SparkifyEtl {
         year(col("start_time")).as("year"), dayofweek(col("start_time")).as("weekday"))
 
   /** songplays fact: log events joined to the song dim on (title, artist
-    * [, duration]); broadcast the dim side explicitly. */
+    * [, duration]); broadcast the dim side explicitly. A logged-out play
+    * (empty userId) keeps a NULL user_id, as the non-ANSI reference does —
+    * casting "" to BIGINT under ANSI would fail the whole load. */
   def buildSongplays(logData: DataFrame, songData: DataFrame): DataFrame = {
     val plays = logData.filter(col("page") === "NextSong")
     // join the DEDUPLICATED dim: a duplicate song-data row must not fan out
@@ -88,7 +90,7 @@ object SparkifyEtl {
       .select(
         monotonically_increasing_id().as("songplay_id"),
         timestamp_millis(col("ts")).as("start_time"),
-        col("userId").cast("long").as("user_id"),
+        when(col("userId") =!= "", col("userId")).cast("long").as("user_id"),
         col("level"), col("song_id"), col("artist_id"),
         col("sessionId").as("session_id"), col("location"),
         col("userAgent").as("user_agent"),

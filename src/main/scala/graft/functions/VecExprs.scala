@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -160,9 +161,9 @@ case class L2Squared(left: Expression, right: Expression)
 }
 
 /** The deterministic random-hyperplane family shared by every LSH surface:
-  * Spark SQL literals (VectorOps.bucketExprSpark), the DuckDB oracle
-  * (bucketExprDuck), and the codegen'd [[LshSigs]] all read planes from
-  * HERE, so the three formulations cannot drift. Plane j, element i =
+  * the DuckDB oracle (VectorOps.bucketExprDuck), the codegen'd [[LshSigs]]
+  * and the HOF reference form its parity test checks it against all read
+  * planes from HERE, so the formulations cannot drift. Plane j, element i =
   * ((1103515245·(j+1) + 12345·(i+1)) mod 1997) − 998 — fixed integer
   * literals, engine-independent. */
 object LshPlanes {
@@ -198,8 +199,11 @@ object LshPlanes {
   * contributes exactly its min(len, 64)-prefix pairs (zip_with pads with
   * NULL products, which the HOF filter drops); an EMPTY prefix makes the
   * plane sum NULL ≥ 0 = false on both engines, here the explicit n == 0
-  * branch. Like [[DotProduct]], element-level NULLs inside the array are
-  * out of contract (toFloatArray). */
+  * branch. A NULL embedding is treated as empty, so it gets the all-zero
+  * signature — the oracle's `CASE WHEN NULL >= 0 … ELSE 0` bucket 0 in
+  * every table — instead of a NULL the candidate join would drop. Like
+  * [[DotProduct]], element-level NULLs inside the array are out of
+  * contract (toFloatArray). */
 case class LshSigs(child: Expression, tables: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
 
@@ -212,8 +216,13 @@ case class LshSigs(child: Expression, tables: Int)
   @transient private lazy val planes: Array[Array[Int]] =
     LshPlanes.matrix(tables)
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData].toFloatArray()
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = {
+    val a = child.eval(input)
+    val xs =
+      if (a == null) Array.emptyFloatArray
+      else a.asInstanceOf[ArrayData].toFloatArray()
     val out = new Array[Int](tables)
     var t = 0
     while (t < tables) {
@@ -236,20 +245,20 @@ case class LshSigs(child: Expression, tables: Int)
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val pl = ctx.addReferenceObj("lshPlanes", planes, "int[][]")
-      val xs = ctx.freshName("xs")
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val j = ctx.freshName("j")
-      val p = ctx.freshName("p")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      val bucket = ctx.freshName("bucket")
-      s"""
-         |float[] $xs = $a.toFloatArray();
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val pl = ctx.addReferenceObj("lshPlanes", planes, "int[][]")
+    val xs = ctx.freshName("xs")
+    val out = ctx.freshName("out")
+    val t = ctx.freshName("t")
+    val j = ctx.freshName("j")
+    val p = ctx.freshName("p")
+    val n = ctx.freshName("n")
+    val acc = ctx.freshName("acc")
+    val i = ctx.freshName("i")
+    val bucket = ctx.freshName("bucket")
+    ev.copy(isNull = FalseLiteral, code = c.code + code"""
+         |float[] $xs = ${c.isNull} ? new float[0] : ${c.value}.toFloatArray();
          |int[] $out = new int[$tables];
          |for (int $t = 0; $t < $tables; $t++) {
          |  int $bucket = 0;
@@ -266,9 +275,9 @@ case class LshSigs(child: Expression, tables: Int)
          |  }
          |  $out[$t] = $bucket;
          |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+         |ArrayData ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+       """.stripMargin)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -279,10 +288,13 @@ object VecExprs {
   private val l2fid = FunctionIdentifier("graft_l2")
   private val sigfid = FunctionIdentifier("graft_lsh_sigs")
 
-  /** Builder shared with GraftExtensions: the `tables` width must be a
-    * foldable int literal (it sizes the generated loop and the plane
-    * matrix at plan time). */
+  /** Builder shared with GraftExtensions: exactly (embedding, tables),
+    * and the `tables` width must be an int literal >= 1 (it sizes the
+    * generated loop and the plane matrix at plan time). */
   def lshSigsBuilder(children: Seq[Expression]): Expression = {
+    if (children.length != 2) throw new IllegalArgumentException(
+      "graft_lsh_sigs(embedding, tables): expects 2 arguments, got " +
+        children.length)
     val t = children(1) match {
       case org.apache.spark.sql.catalyst.expressions.Literal(
         v: Int, org.apache.spark.sql.types.IntegerType) => v
@@ -290,6 +302,8 @@ object VecExprs {
         "graft_lsh_sigs(embedding, tables): tables must be an int " +
           s"literal, got $other")
     }
+    if (t < 1) throw new IllegalArgumentException(
+      s"graft_lsh_sigs(embedding, tables): tables must be >= 1, got $t")
     LshSigs(children.head, t)
   }
 

@@ -325,8 +325,8 @@ object VecIndex {
     * bit-identical to the in-memory trained pipeline. */
   def ivfpqTrainedWrite(emb: DataFrame, name: String, buckets: Int = 4): Unit = {
     val spark = emb.sparkSession
-    val (tcv, tasg0) = VectorOps.trainedCells(
-      emb.select("vec_id", "embedding"))
+    val (tcv, tasg0) = VectorOps.trainedCellsN(
+      emb.select("vec_id", "embedding"), 1)
     val tasg = tasg0.localCheckpoint()
     try {
       Sinks.writeBucketed(tcv, 1, Seq("label"), s"${name}_cent")

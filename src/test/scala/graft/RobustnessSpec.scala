@@ -379,4 +379,52 @@ class RobustnessSpec extends SparkTestBase {
     assert(allDup / allChars > 0.5,
       s"fixture is not hostile enough: corpus dup mass ${allDup / allChars}")
   }
+
+  test("graft_lsh_sigs gives a NULL embedding the all-zero signature (the oracle's bucket 0)") {
+    // DuckDB's bucket CASE sends a NULL vector to ELSE 0 in every table;
+    // a NULL signature would silently drop the row from every candidate
+    // join instead. Checked on both paths: a scanned column (codegen) and
+    // a NULL literal (constant-folded through the interpreted eval).
+    val spk = spark
+    import spk.implicits._
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_null_emb").toString
+    Seq((0L, null: Array[Float]), (1L, Array.fill(64)(0.5f)))
+      .toDF("vec_id", "embedding").write.parquet(s"$dir/e.parquet")
+    Seq(1, 16).foreach { tables =>
+      val sig = spk.read.parquet(s"$dir/e.parquet")
+        .filter(col("vec_id") === 0)
+        .select(graft.functions.VecExprs.lshSigs(spk, col("embedding"), tables))
+        .as[Seq[Int]].collect().toSeq
+      assert(sig === Seq(Seq.fill(tables)(0)), s"tables=$tables")
+      val folded = spk.sql(
+        s"SELECT graft_lsh_sigs(CAST(NULL AS ARRAY<FLOAT>), $tables)")
+        .as[Seq[Int]].collect().toSeq
+      assert(folded === Seq(Seq.fill(tables)(0)), s"folded, tables=$tables")
+    }
+  }
+
+  /** Runs `sql` and asserts it fails with an IllegalArgumentException
+    * whose message names `expected` (anywhere in the cause chain). */
+  private def assertLshSigsRejects(sql: String, expected: String): Unit = {
+    graft.functions.VecExprs.registerLshSigs(spark)
+    val ex = intercept[Throwable](spark.sql(sql).collect())
+    val chain = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      String.valueOf(c.getMessage).contains(expected)),
+      s"$sql: expected IllegalArgumentException naming '$expected', got " +
+        chain.mkString(" <- "))
+  }
+
+  test("graft_lsh_sigs rejects a call without exactly 2 arguments") {
+    assertLshSigsRejects("SELECT graft_lsh_sigs(array(0.5f))",
+      "expects 2 arguments, got 1")
+    assertLshSigsRejects("SELECT graft_lsh_sigs(array(0.5f), 1, 2)",
+      "expects 2 arguments, got 3")
+  }
+
+  test("graft_lsh_sigs rejects tables < 1") {
+    Seq(0, -1).foreach(t => assertLshSigsRejects(
+      s"SELECT graft_lsh_sigs(array(0.5f), $t)", s"tables must be >= 1, got $t"))
+  }
 }

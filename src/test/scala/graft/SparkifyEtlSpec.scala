@@ -99,4 +99,36 @@ class SparkifyEtlSpec extends SparkTestBase {
         === "paid",
       "a stale replayed batch regressed the users dim")
   }
+
+  test("a logged-out NextSong event keeps its play with a NULL user_id, batch and stream") {
+    // Real Sparkify logs carry plays with an empty userId. Under ANSI the
+    // BIGINT cast of "" used to fail the whole load; the play must land
+    // with user_id NULL (the non-ANSI reference's result) and stay out of
+    // the users dim.
+    val dir = Files.createTempDirectory("graft_etl_anon").toString
+    writeFixtures(dir)
+    val anon =
+      """{"artist":"Neko","page":"NextSong","song":"Aurora","length":210.5,"userId":"","firstName":null,"lastName":null,"gender":null,"level":"free","sessionId":9,"ts":1622505900000,"location":null,"userAgent":null,"auth":"Logged Out","method":"PUT","status":200,"itemInSession":0,"registration":null}
+        |""".stripMargin
+    Files.writeString(Paths.get(s"$dir/logs.json"),
+      Files.readString(Paths.get(s"$dir/logs.json")) + anon)
+    SparkifyEtl.run(spark, s"$dir/songs.json", s"$dir/logs.json", s"$dir/out")
+    val sp = spark.read.parquet(s"$dir/out/songplays")
+    assert(sp.count() === 4, "one songplay per NextSong event, logged-out included")
+    assert(sp.filter(col("user_id").isNull).count() === 1)
+    assert(spark.read.parquet(s"$dir/out/users").filter(col("user_id").isNull)
+      .count() === 0, "a logged-out play must not become a user")
+
+    val logDir = s"$dir/logs"; Files.createDirectories(Paths.get(logDir))
+    Files.writeString(Paths.get(s"$logDir/log0.json"),
+      """{"artist":"Piros","page":"NextSong","song":"Delta","length":180.0,"userId":"8","firstName":"Bo","lastName":"K","gender":"M","level":"paid","sessionId":2,"ts":1622592000000,"location":"Y","userAgent":"ua","auth":"Logged In","method":"PUT","status":200,"itemInSession":0,"registration":1.0}
+        |""".stripMargin + anon)
+    SparkifyEtl.runStream(spark, s"$dir/songs.json", logDir, s"$dir/sout")
+      .awaitTermination()
+    val ssp = spark.read.parquet(s"$dir/sout/songplays_stream")
+    assert(ssp.count() === 2 && ssp.filter(col("user_id").isNull).count() === 1)
+    assert(graft.sources.Sinks.readTable(spark, s"$dir/sout/users_stream")
+      .select("user_id").collect().map(_.getLong(0)).toSeq === Seq(8L),
+      "a logged-out play must not become a streamed user")
+  }
 }

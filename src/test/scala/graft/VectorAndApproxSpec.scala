@@ -6,6 +6,64 @@ import graft.functions.VecExprs
 /** The custom DotProduct expression and the approx-distinct (Q17) bound. */
 class VectorAndApproxSpec extends SparkTestBase {
 
+  /** A graded row by name (the IVF/PQ sweep rows have no val of their own). */
+  private def row(name: String): Q = SparkEntry.allQ.find(_.name == name).get
+
+  /** The HOF formulation of LSH table `t`'s 8-plane bucket — the
+    * reference side of the graft_lsh_sigs parity test. Its SUM semantics
+    * match DuckDB's list_sum even on out-of-contract rows: list_sum SKIPS
+    * NULL products and returns NULL for an all-NULL/empty list, while a
+    * plain aggregate(0.0, acc + x) NULL-poisons the whole sum the moment
+    * zip_with pads a ragged vector. So: filter the NULL products out and
+    * start the fold from NULL (the first element coalesces it to 0.0) — a
+    * ragged vector contributes its prefix pairs and an empty one yields
+    * NULL >= 0 = false, as on the oracle. */
+  private def bucketExprSpark(t: Int): String =
+    (0 until 8).map { j =>
+      val arr = graft.functions.LshPlanes.plane(8 * t + j)
+        .mkString("array(", ", ", ")")
+      s"IF(aggregate(filter(zip_with(embedding, $arr, (x, h) -> CAST(x AS DOUBLE) * h), p -> p IS NOT NULL), CAST(NULL AS DOUBLE), (acc, x) -> coalesce(acc, CAST(0.0 AS DOUBLE)) + x) >= 0, ${1 << j}, 0)"
+    }.mkString("(", " + ", ")")
+
+  test("graft_lsh_sigs matches the HOF bucket form, codegen and interpreted") {
+    // Empty, ragged (< 64), exact-64 and over-long (> 64) vectors, at the
+    // single-table and the 16-table serving widths. The data comes from
+    // parquet so no optimizer rule folds the expression at plan time.
+    val spk = spark
+    import spk.implicits._
+    def v(seed: Int, n: Int): Array[Float] =
+      Array.tabulate(n)(i => ((seed * 37 + i * 11) % 19 - 9).toFloat / 9f)
+    val rows = Seq(
+      (0L, Array.empty[Float]), (1L, v(1, 1)), (2L, v(2, 7)), (3L, v(3, 63)),
+      (4L, v(4, 64)), (5L, v(5, 64)), (6L, v(6, 65)), (7L, v(7, 130)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_parity").toString
+    rows.toDF("vec_id", "embedding").write.parquet(s"$dir/e.parquet")
+    val modes = Seq(
+      Map("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.wholeStage" -> "true"),
+      Map("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false"))
+    val keys = modes.head.keys.toSeq
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try modes.foreach { mode =>
+      mode.foreach { case (k, x) => spark.conf.set(k, x) }
+      Seq(1, 16).foreach { tables =>
+        val e = spark.read.parquet(s"$dir/e.parquet")
+        val sigs = VecExprs.lshSigs(spark, col("embedding"), tables)
+        val bad = (0 until tables).flatMap { t =>
+          e.filter(not(expr(bucketExprSpark(t)).cast("int") <=>
+              sigs.getItem(t)))
+            .select("vec_id").as[Long].collect().map(id => (t, id))
+        }
+        assert(bad.isEmpty,
+          s"graft_lsh_sigs != HOF bucket ($mode, tables=$tables) at (table, vec_id) $bad")
+      }
+    } finally saved.foreach {
+      case (k, Some(x)) => spark.conf.set(k, x)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("dot(v, v) == 1 for unit-norm fixture vectors (codegen path)") {
     val e = graft.sources.Tables.embeddings(spark, sf())
     val selfSims = e.select(
@@ -417,10 +475,10 @@ class VectorAndApproxSpec extends SparkTestBase {
     val spk = spark
     import spk.implicits._
     val dir = sf()
-    val out = graft.operators.VectorOps.qVecIndexIvf.fn(spark, dir)
+    val out = row("q_vec_index_ivf").fn(spark, dir)
       .as[(Long, Long, Double, Int)].collect().toSeq
     graft.sources.Scratch.releaseAll()
-    val inMem = graft.operators.VectorOps.qVecIvfProbe2.fn(spark, dir)
+    val inMem = row("q_vec_ivf_probe2").fn(spark, dir)
       .as[(Long, Long, Double, Int)].collect().toSeq
     assert(out.nonEmpty, "IVF index probe returned no neighbors")
     assert(out === inMem,
@@ -465,8 +523,8 @@ class VectorAndApproxSpec extends SparkTestBase {
       assert(o.nonEmpty, s"${q.name} returned no recall rows")
       o.sum / o.length
     }
-    val res = meanRecall(graft.operators.VectorOps.qVecRecallIvfPqRes)
-    val flat = meanRecall(graft.operators.VectorOps.qVecRecallIvfPq)
+    val res = meanRecall(row("q_vec_recall_ivfpq_res"))
+    val flat = meanRecall(row("q_vec_recall_ivfpq"))
     info(f"planted-cluster recall@5: residual $res%.3f vs flat $flat%.3f")
     assert(res >= flat,
       s"residual recall $res < flat recall $flat on a clustered corpus")
@@ -484,10 +542,10 @@ class VectorAndApproxSpec extends SparkTestBase {
     val spk = spark
     import spk.implicits._
     val dir = sf()
-    val out = graft.operators.VectorOps.qVecIndexIvfPqRes.fn(spark, dir)
+    val out = row("q_vec_index_ivfpq_res").fn(spark, dir)
       .as[(Long, Long, Double, Int)].collect().toSeq
     graft.sources.Scratch.releaseAll()
-    val inMem = graft.operators.VectorOps.qVecIvfPqRes.fn(spark, dir)
+    val inMem = row("q_vec_ivfpq_res").fn(spark, dir)
       .as[(Long, Long, Double, Int)].collect().toSeq
     assert(out.nonEmpty, "residual IVF-PQ index probe returned no neighbors")
     assert(out === inMem,
@@ -509,8 +567,8 @@ class VectorAndApproxSpec extends SparkTestBase {
       graft.sources.Scratch.releaseAll()
       o.sum / o.length
     }
-    val rr = mean(graft.operators.VectorOps.qVecRecallIvfPqRr)
-    val adc = mean(graft.operators.VectorOps.qVecRecallIvfPq)
+    val rr = mean(row("q_vec_recall_ivfpq_rr"))
+    val adc = mean(row("q_vec_recall_ivfpq"))
     assert(rr >= adc, s"re-rank recall $rr < pure-ADC recall $adc")
     assert(rr > 0.0, "re-rank recall must be nonzero on the fixture")
   }
@@ -527,22 +585,22 @@ class VectorAndApproxSpec extends SparkTestBase {
       graft.sources.Scratch.releaseAll()
       o.sum / o.length
     }
-    val adc2 = mean(graft.operators.VectorOps.qVecRecallIvfPq)
-    val adc4 = mean(graft.operators.VectorOps.qVecRecallIvfPqP4)
-    val rr2 = mean(graft.operators.VectorOps.qVecRecallIvfPqRr)
-    val rr4 = mean(graft.operators.VectorOps.qVecRecallIvfPqRrP4)
+    val adc2 = mean(row("q_vec_recall_ivfpq"))
+    val adc4 = mean(row("q_vec_recall_ivfpq_p4"))
+    val rr2 = mean(row("q_vec_recall_ivfpq_rr"))
+    val rr4 = mean(row("q_vec_recall_ivfpq_rr_p4"))
     assert(adc4 >= adc2, s"p4 ADC recall $adc4 < p2 $adc2")
     assert(rr4 > rr2, s"p4 re-rank recall $rr4 must beat p2 $rr2")
     assert(rr4 >= adc4, s"p4 re-rank $rr4 < p4 ADC $adc4")
     // the cut-width knob: a 40-candidate cut must never lose to 20 (it
     // re-ranks a superset; sf0.1 measures 0.44 vs 0.41)
-    val rr4w = mean(graft.operators.VectorOps.qVecRecallIvfPqRrP4W40)
+    val rr4w = mean(row("q_vec_recall_ivfpq_rr_p4_w40"))
     assert(rr4w >= rr4, s"w40 re-rank recall $rr4w < w20 $rr4")
     // the exact tier EQUALIZES code resolutions: the residual two-tier
     // rung must never fall below the flat one at the same probes/cut
     // (sf0.1 measures them exactly equal at both operating points)
-    val resRr = mean(graft.operators.VectorOps.qVecRecallIvfPqResRr)
-    val resRr4w = mean(graft.operators.VectorOps.qVecRecallIvfPqResRrP4W40)
+    val resRr = mean(row("q_vec_recall_ivfpq_res_rr"))
+    val resRr4w = mean(row("q_vec_recall_ivfpq_res_rr_p4_w40"))
     assert(resRr >= rr2, s"residual re-rank $resRr < flat re-rank $rr2")
     assert(resRr4w >= rr4, s"residual full stack $resRr4w < flat p4 $rr4")
   }
@@ -561,8 +619,8 @@ class VectorAndApproxSpec extends SparkTestBase {
       graft.sources.Scratch.releaseAll()
       o.sum / o.length
     }
-    val flat = mean(graft.operators.VectorOps.qVecRecallIvfPqClu)
-    val res = mean(graft.operators.VectorOps.qVecRecallIvfPqResClu)
+    val flat = mean(row("q_vec_recall_ivfpq_clu"))
+    val res = mean(row("q_vec_recall_ivfpq_res_clu"))
     assert(res > flat,
       s"residual recall $res must strictly beat flat $flat on a clustered corpus")
     assert(res > 0.5, s"residual recall $res unexpectedly low — generator drift?")
@@ -582,8 +640,8 @@ class VectorAndApproxSpec extends SparkTestBase {
       graft.sources.Scratch.releaseAll()
       o.sum / o.length
     }
-    val r1 = mean(graft.operators.VectorOps.qVecRecallIvfPqTrained)
-    val r2 = mean(graft.operators.VectorOps.qVecRecallIvfPqT2)
+    val r1 = mean(row("q_vec_recall_ivfpq_trained"))
+    val r2 = mean(row("q_vec_recall_ivfpq_t2"))
     info(f"trained recall@5: 1 round $r1%.3f vs 2 rounds $r2%.3f")
     // small tolerance, not strict monotonicity: Lloyd rounds minimize
     // quantization distortion, not recall@5 — a second round may shuffle
@@ -591,11 +649,11 @@ class VectorAndApproxSpec extends SparkTestBase {
     // change; the hard invariant is the convergence shift below
     assert(r2 >= r1 - 0.02, s"round 2 lost recall: $r1 -> $r2")
     // convergence shift: labels that changed between round 1 and round 2
-    val e = graft.operators.VectorOps.probeCleanEmb(spark, dir)
+    val e = graft.operators.VectorOps.cleanEmbeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    val a1 = graft.operators.VectorOps.probeTrainedCellsN(e, 1)._2
+    val a1 = graft.operators.VectorOps.trainedCellsN(e, 1)._2
       .withColumnRenamed("label", "l1")
-    val a2 = graft.operators.VectorOps.probeTrainedCellsN(e, 2)._2
+    val a2 = graft.operators.VectorOps.trainedCellsN(e, 2)._2
       .withColumnRenamed("label", "l2")
     val joined = a1.join(a2, "vec_id")
     val total = joined.count()
@@ -619,8 +677,8 @@ class VectorAndApproxSpec extends SparkTestBase {
       graft.sources.Scratch.releaseAll()
       o.sum / o.length
     }
-    val lab = mean(graft.operators.VectorOps.qVecRecallIvfPqClu)
-    val trn = mean(graft.operators.VectorOps.qVecRecallIvfPqTClu)
+    val lab = mean(row("q_vec_recall_ivfpq_clu"))
+    val trn = mean(row("q_vec_recall_ivfpq_tclu"))
     info(f"clustered-corpus recall@5: planted labels $lab%.3f vs trained $trn%.3f")
     assert(trn >= lab - 0.05,
       s"trained cells $trn fell below planted labels $lab on a clustered corpus")
