@@ -456,7 +456,7 @@ object CorpusStats {
     graft.sources.Sinks.upsertBatch(third(1, 1), path, "doc_id", "seq") // v1
     graft.sources.Sinks.upsertBatch(third(2, 2), path, "doc_id", "seq") // v2
     val cardOld = datacard(graft.sources.Sinks
-        .readTablePrevious(spark, path)
+        .readTableVersion(spark, path, 1)
         .getOrElse(sys.error(s"no predecessor version at $path")))
       .select(col("source"), col("n_docs").as("n_docs_old"),
         col("n_tokens").as("n_tokens_old"),

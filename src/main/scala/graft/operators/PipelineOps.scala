@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Q
 import graft.functions.{BloomExprs, Det}
-import graft.sources.Tables
+import graft.sources.{Sinks, Tables}
 
 /** Second wave of large-pipeline operators: an explicit Bloom-filter
   * semi-join prefilter, stratified hash sampling, per-document token
@@ -584,47 +584,6 @@ object PipelineOps {
     * dimensions' envelopes. The manifest costs one scan of the
     * just-written data (what a format's writer accumulates for free) and
     * is file-count-sized — metadata, never corpus-sized. */
-  /** Recursive data-file listing of a catalog table's location (hidden
-    * entries skipped) — the metadata read the manifest builders share. */
-  private def listTableFiles(spark: SparkSession, table: String): Seq[String] = {
-    val loc = new org.apache.hadoop.fs.Path(tableLocation(spark, table))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(loc)) return Nil
-    val it = fs.listFiles(loc, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      val rel = p.toUri.getPath.stripPrefix(loc.toUri.getPath)
-      val hidden = rel.split("/").exists(seg =>
-        seg.startsWith("_") || seg.startsWith("."))
-      if (!hidden && p.getName.endsWith(".parquet")) buf += p.toString
-    }
-    buf.toSeq
-  }
-
-  /** Per-file min/max envelopes over `cols` for an explicit file list,
-    * harvested from parquet FOOTER metadata (no data pages — the same
-    * O(files) builder the lake-protocol commits use, reused here for the
-    * managed-table layout family). None when any footer is unusable
-    * (exotic type, omitted stats) — callers fall back to the data-scan
-    * pass, an optimization valve, never a correctness dependency. */
-  private def footerManifestDF(spark: SparkSession, files: Seq[String],
-      cols: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
-    import scala.jdk.CollectionConverters._
-    if (files.isEmpty) return None
-    val typed = cols.map(c => (c, schema(c).dataType))
-    val infos = graft.sources.Sinks.readFooters(spark, files, typed)
-    graft.sources.Sinks.footerStatsRows(infos, typed.map(_._2)).map { rs =>
-      val ms = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("file",
-          org.apache.spark.sql.types.StringType) +: cols.flatMap(c => Seq(
-          org.apache.spark.sql.types.StructField(s"${c}_min", schema(c).dataType),
-          org.apache.spark.sql.types.StructField(s"${c}_max", schema(c).dataType))))
-      spark.createDataFrame(rs.asJava, ms)
-    }
-  }
-
   /** Per-file min/max STATS manifest over `cols` for an already-written
     * table — the generic half of the data-skipping contract (what a
     * format's writer accumulates per file). Envelopes come from footer
@@ -633,15 +592,9 @@ object PipelineOps {
     * file-count-sized metadata. */
   private[graft] def statsWriteIndex(spark: SparkSession, table: String,
       cols: Seq[String]): Unit = {
-    val stats = footerManifestDF(spark, listTableFiles(spark, table),
-        cols, spark.table(table).schema)
-      .getOrElse {
-        val aggs = cols.flatMap(c =>
-          Seq(min(c).as(s"${c}_min"), max(c).as(s"${c}_max")))
-        spark.table(table)
-          .groupBy(input_file_name().as("file"))
-          .agg(aggs.head, aggs.tail: _*)
-      }
+    val stats = Sinks.statsFrame(spark,
+        Sinks.listDataFiles(spark, tableLocation(spark, table)),
+        cols, spark.table(table).schema)._1
       // provenance flag: rows written by a clustered write are sorted on
       // the layout key; append-refresh rows are not. OPTIMIZE rewrites
       // exactly the unclustered files — the same bookkeeping a table
@@ -708,29 +661,18 @@ object PipelineOps {
     * recluster tightens them; the sorted base keeps its tight stats. */
   private[graft] def statsAppendIndex(spark: SparkSession, table: String,
       cols: Seq[String]): Unit = {
-    // normalize to bare URI paths: input_file_name() renders file:///p,
-    // FileStatus renders file:/p — comparing raw strings would re-index
-    // (and then double-read) every base file.
-    def norm(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath
-    // RECURSIVE listing (metadata op: one row per file): a PARTITIONED
-    // table's files live in p=.../ subdirectories — a flat listStatus
-    // would silently never index them and the skip-scan would prune
-    // forever against a stale manifest. Hidden dirs (_spark_metadata,
-    // .staging) are skipped the way Spark's own FileIndex does.
-    val listed = listTableFiles(spark, table)
+    // normalized URI paths (Sinks.norm): comparing raw strings would
+    // re-index (and then double-read) every base file. The listing is
+    // RECURSIVE (metadata op: one row per file): a PARTITIONED table's
+    // files live in p=.../ subdirectories — a flat listStatus would
+    // silently never index them and the skip-scan would prune forever
+    // against a stale manifest.
     val known = spark.table(s"${table}_stats")
-      .select("file").collect().map(r => norm(r.getString(0))).toSet
-    val fresh = listed.filterNot(p => known(norm(p)))
+      .select("file").collect().map(r => Sinks.norm(r.getString(0))).toSet
+    val fresh = Sinks.listDataFiles(spark, tableLocation(spark, table))
+      .filterNot(p => known(Sinks.norm(p)))
     if (fresh.nonEmpty) {
-      footerManifestDF(spark, fresh, cols, spark.table(table).schema)
-        .getOrElse {
-          val aggs = cols.flatMap(c =>
-            Seq(min(c).as(s"${c}_min"), max(c).as(s"${c}_max")))
-          spark.read.schema(spark.table(table).schema).parquet(fresh: _*)
-            .groupBy(input_file_name().as("file"))
-            .agg(aggs.head, aggs.tail: _*)
-        }
+      Sinks.statsFrame(spark, fresh, cols, spark.table(table).schema)._1
         .withColumn("clustered", lit(false)) // appended as-arrived, unsorted
         .coalesce(1)
         .write.format("parquet").mode("append")
@@ -804,16 +746,9 @@ object PipelineOps {
     * half of a table format's file-stats contract (Delta/Iceberg bloom
     * indexes beside min/max stats). */
   private[graft] def bloomWriteIndex(spark: SparkSession, table: String,
-      keyCol: String, estItems: Long = 40000L, numBits: Long = 400000L): Unit = {
-    BloomExprs.register(spark)
-    val manifest = spark.table(table)
-      .groupBy(input_file_name().as("file"))
-      .agg(expr(s"graft_bloom_agg(xxhash64($keyCol), ${estItems}L, ${numBits}L)")
-        .as("bloom"))
-      .coalesce(1)
-    graft.sources.Sinks.writeClustered(manifest, 1, Seq("file"),
-      s"${table}_bloom")
-  }
+      keyCol: String): Unit =
+    Sinks.writeClustered(Sinks.bloomFrame(spark.table(table), keyCol)
+      .coalesce(1), 1, Seq("file"), s"${table}_bloom")
 
   /** Bloom-skipping point lookup: test each probe key's xxhash64 against
     * every file's Bloom sketch, read ONLY the files that may contain a
@@ -1080,12 +1015,10 @@ object PipelineOps {
     // qualified schemes) differ as raw strings, and a missed match would
     // both rescan the adopted base (defeating O(delta)) and give each
     // adopted file TWO manifest rows — double-counted by every skip-scan
-    def norm(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath
-    val adoptedNorm = adopted.map(a => norm(a._2)).toSet
+    val adoptedNorm = adopted.map(a => Sinks.norm(a._2)).toSet
     val newFiles = fs.listStatus(dstLoc).map(_.getPath.toString)
       .filter(_.endsWith(".parquet"))
-      .filterNot(p => adoptedNorm(norm(p))).toSeq
+      .filterNot(p => adoptedNorm(Sinks.norm(p))).toSeq
     val spk = spark
     import spk.implicits._
     val adoptedStats = adopted.toSeq.map { case (r, path) =>
@@ -1098,16 +1031,8 @@ object PipelineOps {
     val manifest =
       if (newFiles.isEmpty) adoptedStats
       else
-        footerManifestDF(spark, newFiles, Seq("x", "y"),
-            spark.table(src).schema)
-          .getOrElse {
-            val aggs = Seq("x", "y").flatMap(c =>
-              Seq(min(c).as(s"${c}_min"), max(c).as(s"${c}_max")))
-            spark.read.schema(spark.table(src).schema)
-              .parquet(newFiles: _*)
-              .groupBy(input_file_name().as("file"))
-              .agg(aggs.head, aggs.tail: _*)
-          }
+        Sinks.statsFrame(spark, newFiles, Seq("x", "y"),
+            spark.table(src).schema)._1
           .select(col("file"), col("x_min").cast("int"),
             col("x_max").cast("int"), col("y_min").cast("int"),
             col("y_max").cast("int"))

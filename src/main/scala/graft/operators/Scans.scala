@@ -341,7 +341,7 @@ object Scans {
   /** TIME-TRAVEL read, graded end-to-end: seed a keyed table, apply TWO
     * MERGE batches through the pointer-publish protocol, then read the
     * table AS OF one publish back ([[graft.sources.Sinks
-    * .readTablePrevious]]) — the state after batch 1, before batch 2.
+    * .readTableVersion]]) — the state after batch 1, before batch 2.
     * The oracle states that intermediate state declaratively (latest-wins
     * over base ∪ batch 1) and knows nothing about versions, so the graded
     * hash proves the retained predecessor dir really is the pre-batch-2
@@ -395,7 +395,7 @@ object Scans {
         lit(0.0).as("bal"))
     graft.sources.Sinks.upsertBatch(b1, path, "key", "seq") // publishes v1
     graft.sources.Sinks.upsertBatch(b2, path, "key", "seq") // publishes v2
-    graft.sources.Sinks.readTablePrevious(spark, path)
+    graft.sources.Sinks.readTableVersion(spark, path, 1)
       .getOrElse(sys.error(s"no predecessor version at $path"))
       .select("key", "seq", "bal").orderBy("key")
   }
@@ -475,7 +475,7 @@ object Scans {
     graft.sources.Sinks.upsertBatch(b2, path, "key", "seq") // publishes v2
     val cur = graft.sources.Sinks.readTable(spark, path)
       .select("key", "seq", "bal")
-    val prev = graft.sources.Sinks.readTablePrevious(spark, path)
+    val prev = graft.sources.Sinks.readTableVersion(spark, path, 1)
       .getOrElse(sys.error(s"no predecessor version at $path"))
       .select(col("key"), col("seq").as("old_seq"), col("bal").as("old_bal"))
     cur.join(prev, Seq("key"), "left")

@@ -174,19 +174,11 @@ object Sinks {
     if (hasParquetFiles(fsv, dp)) {
       val dels = spark.read.parquet(dp.toString)
         .filter(functions.col("file").contains(s"/batch=$batchId/"))
-        .select(functions.col("file").as("__dv_file"),
-          functions.col("pos").as("__dv_pos"))
-        .distinct()
-      if (!dels.isEmpty) {
-        // materialize the currently-hidden rows into the value store
-        // while their files still exist (the write reads the old dir)
-        spark.read.parquet(batchDir)
-          .withColumn("__dv_file", functions.col("_metadata.file_path"))
-          .withColumn("__dv_pos", functions.col("_metadata.row_index"))
-          .join(dels, Seq("__dv_file", "__dv_pos"), "left_semi")
-          .drop("__dv_file", "__dv_pos")
+      // materialize the currently-hidden rows into the value store while
+      // their files still exist (the write reads the old dir)
+      if (!dels.isEmpty)
+        joinPositions(spark.read.parquet(batchDir), dels, "left_semi")
           .write.mode(SaveMode.Append).parquet(vstore.toString)
-      }
     }
     val content =
       if (!hasParquetFiles(fsv, vstore)) batch
@@ -211,14 +203,26 @@ object Sinks {
     // skip-readers until the streaming engine replays it (at-least-once),
     // the data-then-log commit discipline of every lake format. Plain
     // full-table readers ([[readTable]]) see the batch either way.
-    val fm = healedFilesLog(fsv, live)
-    if (fsv.exists(fm)) {
+    appendFilesLog(spark, path, live, Seq((batchDir, true)))
+  }
+
+  /** Append `entries` (entry, is-dir) to the live version's `_files`
+    * commit log — the one in-place log append [[writeBatch]] and
+    * [[upsertBatchDv]] share. Heals a crashed compaction swap first
+    * ([[healedManifest]]); a version without a log (legacy) stays
+    * without one. Past [[FilesLogCompactThreshold]] parts the log is
+    * folded back to one file. */
+  private def appendFilesLog(spark: SparkSession, rootPath: String,
+      live: String, entries: Seq[(String, Boolean)]): Unit = {
+    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(live))
+    val fm = healedManifest(fs, live, FilesManifest)
+    if (entries.nonEmpty && fs.exists(fm)) {
       import spark.implicits._
-      Seq((s"$live/batch=$batchId", true, null: String))
+      entries.map { case (e, isDir) => (e, isDir, null: String) }
         .toDF("entry", "dir", "schema_json")
         .coalesce(1)
         .write.mode(SaveMode.Append).parquet(fm.toString)
-      maybeCompactFilesLog(spark, path, live)
+      maybeCompactManifest(spark, rootPath, live, FilesManifest)
     }
   }
 
@@ -230,57 +234,43 @@ object Sinks {
     * into one. */
   private val FilesLogCompactThreshold = 16
 
-  /** Fold the `_files` log back to a single file once the per-batch
-    * appends pass [[FilesLogCompactThreshold]]. Crash-safe without an
-    * atomic dir swap: the compacted log is staged to a hidden tmp dir,
-    * then swapped RENAME-FIRST (rename `_files` aside to a hidden
-    * `.files-compact-old-*` dir, rename the staged tmp into place, delete
-    * the old) — a crash between the renames leaves the version without
-    * `_files` but with the complete log content parked in the old dir,
-    * which [[healedFilesLog]] renames back on the next append. Skip-reads
-    * inside that window fall to the counted listing valve (sound); the
-    * r19 ADVICE failure mode — a streaming-only table losing its log
-    * FOREVER because the appenders' `fs.exists` guard never recreates it —
-    * is closed by the heal. Duplicate dir entries from at-least-once
-    * replays dedup here too.
-    *
-    * LEASE-GUARDED, best-effort: the snapshot→delete→rename rewrite would
-    * silently DESTROY a log row a concurrent lease-holding mutator (e.g.
-    * an [[upsertBatchDv]] logging its landed files) appends in between —
-    * the appended files would vanish from the commit log while full
-    * readers still see them, a permanent reader-family split with no
-    * replay to heal it. So: a caller already holding this root's lease
-    * compacts directly; a lockless caller ([[writeBatch]]) takes the
-    * lease for the rewrite and simply SKIPS when a mutator holds it —
-    * compaction is maintenance, the next over-threshold append retries.
-    * (A second lockless streaming writer on one table is outside the
-    * sink's contract anyway — their batch=<id> dirs would collide.) */
-  private def maybeCompactFilesLog(spark: SparkSession, rootPath: String,
-      live: String): Unit =
-    maybeCompactManifest(spark, rootPath, live, FilesManifest)
-
   /** The hidden swap-litter prefix for `name`'s compaction: staged tmp
     * dirs are `<prefix><tag>`, the parked pre-swap manifest is
     * `<prefix>old-<tag>`. */
   private def parkPrefix(name: String): String =
     s".${name.stripPrefix("_")}-compact-"
 
-  /** [[maybeCompactFilesLog]] generalized to ANY appended hidden manifest
-    * (`_files`, and since the MOR merge harvests envelopes per batch,
-    * `_stats` / `_bloom` too — each append adds a one-file parquet, so a
-    * long merge-maintained table would regrow the O(appends) file count
-    * in its manifest dirs that the threshold exists to cap). Fold =
-    * whole-row distinct: every appended row is keyed by its file entry,
-    * so duplicates only arise from at-least-once replays and fold
-    * losslessly. */
+  /** Fold an appended hidden manifest (`_files`, and the MOR merge's
+    * per-batch `_stats` / `_bloom` harvests) back to a single file once
+    * its appends pass [[FilesLogCompactThreshold]]. Fold = whole-row
+    * distinct: every appended row is keyed by its file entry, so
+    * duplicates only arise from at-least-once replays and fold
+    * losslessly. Crash-safe without an atomic dir swap: the compacted
+    * manifest is staged to a hidden tmp dir, then swapped RENAME-FIRST
+    * (rename the manifest aside to a hidden `<prefix>old-*` dir, rename
+    * the staged tmp into place, delete the old) — a crash between the
+    * renames leaves the version without the manifest but with its
+    * complete content parked in the old dir, which [[healedManifest]]
+    * renames back on the next append. Skip-reads inside that window fall
+    * to the counted listing valve (sound); the r19 ADVICE failure mode —
+    * a streaming-only table losing its log FOREVER because the appenders'
+    * `fs.exists` guard never recreates it — is closed by the heal.
+    *
+    * LEASE-GUARDED, best-effort: the snapshot→delete→rename rewrite would
+    * silently DESTROY a row a concurrent lease-holding mutator (e.g. an
+    * [[upsertBatchDv]] logging its landed files) appends in between — a
+    * permanent reader-family split with no replay to heal it. So: a
+    * caller already holding this root's lease compacts directly; a
+    * lockless caller ([[writeBatch]]) takes the lease for the rewrite and
+    * simply SKIPS when a mutator holds it — compaction is maintenance,
+    * the next over-threshold append retries. (A second lockless streaming
+    * writer on one table is outside the sink's contract anyway — their
+    * batch=<id> dirs would collide.) */
   private def maybeCompactManifest(spark: SparkSession, rootPath: String,
       live: String, name: String): Unit = {
     val fm = new org.apache.hadoop.fs.Path(live, name)
     val fs = fsOf(spark, fm)
-    if (!fs.exists(fm)) return
-    val parts = fs.listStatus(fm).count(st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet"))
-    if (parts <= FilesLogCompactThreshold) return
+    if (parquetParts(fs, fm).size <= FilesLogCompactThreshold) return
     val prefix = parkPrefix(name)
     def rewrite(): Unit = {
       // sweep swap litter from earlier crashed compactions FIRST: the
@@ -311,23 +301,18 @@ object Sinks {
       catch { case _: ConcurrentWriterException => () } // busy: skip, retry next append
   }
 
-  /** Resolve the version's `_files` log path, HEALING a compaction swap
-    * that crashed between [[maybeCompactFilesLog]]'s two renames: the
-    * complete log content survives in the parked `.files-compact-old-*`
-    * dir, so rename it back before any appender concludes "this version
-    * has no log". Without this the appenders' `fs.exists` guard never
-    * recreates the log and a long streaming-only table silently degrades
+  /** Resolve the version's manifest path `name`, HEALING a compaction
+    * swap that crashed between [[maybeCompactManifest]]'s two renames:
+    * the complete content survives in the parked `<prefix>old-*` dir, so
+    * rename it back before any appender concludes "this version has no
+    * log". Without this the appenders' `fs.exists` guard never recreates
+    * the `_files` log and a long streaming-only table silently degrades
     * every skip read to the counted listing valve forever (sound, but it
     * defeats the O(manifest) contract — the r19 ADVICE finding). At most
     * one old dir can exist (the rewrite sweeps superseded swap litter
     * before each compaction), so the rename-back is unambiguous. Called
     * from MUTATOR append paths only — single-writer by contract; readers
     * in the crash window keep falling to the sound counted valve. */
-  private def healedFilesLog(fs: org.apache.hadoop.fs.FileSystem,
-      live: String): org.apache.hadoop.fs.Path =
-    healedManifest(fs, live, FilesManifest)
-
-  /** [[healedFilesLog]] generalized to any compactable hidden manifest. */
   private def healedManifest(fs: org.apache.hadoop.fs.FileSystem,
       live: String, name: String): org.apache.hadoop.fs.Path = {
     val fm = new org.apache.hadoop.fs.Path(live, name)
@@ -393,125 +378,54 @@ object Sinks {
   def upsertBatch(batch: DataFrame, path: String, keyCol: String,
       seqCol: String, statsCols: Seq[String] = Nil,
       bloomCol: String = null): Unit =
-    withTableLock(batch.sparkSession, path) {
+    rewrite(batch.sparkSession, path) { snap =>
     val spark = batch.sparkSession
-    // A crashed FIRST publish over a legacy (pointerless) layout leaves
-    // fully-staged orphan `data-*` dirs in the root; the legacy-base read
-    // below reads the whole root and would sweep them into the table
-    // (conflicting-structure failure or duplicate keys after the merge).
-    // Nothing under data-* on a pointerless root was ever committed — the
-    // pointer write IS the commit — so deleting them first makes replay
-    // after a crash at ANY point converge on the legacy path too.
-    sweepUncommittedStages(spark, path)
-    // deterministic total order per key: (seq, xxhash64(whole row)) —
-    // the hash is computed over the name-sorted column list so base and
-    // batch sides hash identically regardless of physical column order
-    def rowHash(cols: Seq[String], prefix: String = "") =
-      functions.xxhash64(cols.sorted.map(c => functions.col(s"$prefix$c")): _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCol)
-      .orderBy(functions.col(seqCol).desc, rowHash(batch.columns.toSeq).desc)
-    val latest = batch
-      .withColumn("__rn", functions.row_number().over(w))
-      .filter(functions.col("__rn") === 1).drop("__rn")
     // table existence via the PATH's filesystem (java.io.File would read
     // the local disk even when the table lives on HDFS/S3 and silently
     // replace the base table with the bare batch). A root holding only
     // staged `data-*` dirs and no pointer is a crashed initial publish —
     // nothing was ever committed, so the table does not exist yet.
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val pointer = readPointer(fs, root)
-    val resolved = pointer.map(n => s"$path/$n").getOrElse(path)
     val tableExists =
-      if (pointer.isDefined) fs.exists(new org.apache.hadoop.fs.Path(resolved))
-      else fs.exists(root) && fs.listStatus(root).exists { st =>
+      if (snap.lines.nonEmpty)
+        snap.fs.exists(new org.apache.hadoop.fs.Path(snap.live))
+      else snap.fs.exists(snap.root) && snap.fs.listStatus(snap.root).exists { st =>
         val n = st.getPath.getName
         !n.startsWith("data-") && !n.startsWith(".")
       }
     val merged =
-      if (!tableExists) latest
+      if (!tableExists) mergeRule(batch, new StructType(), keyCol, seqCol).latest
       else {
-        val base = readVersionDir(spark, resolved)
+        val base = readVersionDir(spark, snap.live)
         // ADDITIVE SCHEMA EVOLUTION: a batch must carry every current
         // table column (key/seq resolution and the row-hash tiebreak are
         // defined over them) and MAY append new ones — base-won rows get
         // null in the new columns, the Delta/Iceberg mergeSchema
         // contract. A batch MISSING a table column fails loudly below
         // (unresolved __b_ column), never silently drops data.
-        val newCols = latest.columns.filterNot(base.columns.contains).toSeq
-        // TYPE parity for columns on BOTH sides: the when/otherwise merge
-        // below would silently coerce a same-name-different-type batch
-        // column (e.g. a BIGINT batch over an INT base), permanently
-        // widening the table schema on publish AND changing the xxhash64
-        // tiebreak inputs for replayed pre-widening batches (int and long
-        // hash differently) — evolution is additive-only, so a type
-        // change fails loudly here instead
-        val typeClash = base.columns.filter(latest.columns.contains)
-          .flatMap { c =>
-            val bt = base.schema(c).dataType
-            val lt = latest.schema(c).dataType
-            if (bt == lt) None
-            else Some(s"$c (table ${bt.sql}, batch ${lt.sql})")
-          }
-        if (typeClash.nonEmpty) throw new IllegalArgumentException(
-          "schema evolution is additive-only: the batch changes the type " +
-            s"of existing column(s) ${typeClash.mkString(", ")} — cast " +
-            "the batch to the table's types explicitly before upserting")
-        // prefix every batch column so the full-outer join is unambiguous;
-        // per key, the greater (seq, row-hash) wins — batch on exact ties
-        // (identical row) and inserts
-        val b = latest.columns.foldLeft(latest) { (d, c) =>
-          d.withColumnRenamed(c, s"__b_$c")
-        }
-        // the equal-seq tiebreak hashes the FULL post-evolution column set
-        // on BOTH sides (typed nulls where the base lacks a new column) —
-        // hashing only base.columns would order an evolving batch's rows
-        // without their new columns, and a replay AFTER the evolution
-        // (when those columns exist on both sides) could pick a different
-        // winner, breaking the replay-convergence contract above
-        val allCols = base.columns.toSeq ++ newCols
-        val baseHash = functions.xxhash64(allCols.sorted.map { c =>
-          if (newCols.contains(c))
-            functions.lit(null).cast(latest.schema(c).dataType)
-          else functions.col(c)
-        }: _*)
-        val batchHash = rowHash(allCols, "__b_")
-        val batchWins = functions.col(s"__b_$keyCol").isNotNull &&
-          (functions.col(keyCol).isNull ||
-            functions.col(s"__b_$seqCol") > functions.col(seqCol) ||
-            (functions.col(s"__b_$seqCol") === functions.col(seqCol) &&
-              batchHash >= baseHash))
-        base.join(b,
+        val m = mergeRule(batch, base.schema, keyCol, seqCol)
+        base.join(m.prefixed,
             functions.col(keyCol) === functions.col(s"__b_$keyCol"),
             "full_outer")
           .select(base.columns.toSeq.map { c =>
-            functions.when(batchWins, functions.col(s"__b_$c"))
+            functions.when(m.batchWins, functions.col(s"__b_$c"))
               .otherwise(functions.col(c)).as(c)
-          } ++ newCols.map { c =>
+          } ++ m.newCols.map { c =>
             // typed null: a bare lit(null) is NullType, unwritable parquet
-            functions.when(batchWins, functions.col(s"__b_$c"))
-              .otherwise(functions.lit(null).cast(latest.schema(c).dataType))
+            functions.when(m.batchWins, functions.col(s"__b_$c"))
+              .otherwise(functions.lit(null).cast(batch.schema(c).dataType))
               .as(c)
           }: _*)
       }
-    // Stage fully (the merge reads the live version, which the publish
-    // protocol keeps intact until one more cycle completes), then commit
-    // with the single atomic pointer swap. With `statsCols`, the staged
-    // version is CLUSTERED by them and carries its own per-file min/max
-    // manifest INSIDE the version dir (`_stats` — underscore-hidden from
-    // parquet readers, retired with its version), so a MERGE-maintained
-    // table keeps file-skipping without any out-of-band reindex: the
-    // manifest is part of the commit, exactly like a format's file stats.
-    // The stats pass reads only `statsCols` from the just-staged columnar
-    // files — column-pruned, a small fraction of the merge's own write.
-    // the layout contract propagates: a batch that doesn't name statsCols
-    // on an already-maintained table inherits the live manifest's columns
-    // (a plain upsert must not silently strip the table's file-skipping)
-    val effStats =
-      if (statsCols.nonEmpty) statsCols else liveStatsCols(spark, path)
-    val effBloom = Option(bloomCol).orElse(liveBloomCol(spark, path))
-    val staged = stageName()
+    // With `statsCols`, the staged version is CLUSTERED by them and
+    // carries its own per-file min/max manifest INSIDE the version dir
+    // (`_stats` — underscore-hidden from parquet readers, retired with
+    // its version), so a MERGE-maintained table keeps file-skipping
+    // without any out-of-band reindex: the manifest is part of the
+    // commit, exactly like a format's file stats. The layout contract
+    // propagates: a batch that doesn't name statsCols on an
+    // already-maintained table inherits the live manifest's columns (a
+    // plain upsert must not silently strip the table's file-skipping).
+    val effStats = if (statsCols.nonEmpty) statsCols else snap.statsCols
     // 16 range partitions is the FIXTURE operating point (sf<=0.1); a
     // production deployment sizes output files by target bytes
     // (spark.sql.files.maxRecordsPerFile / the table's target file
@@ -521,46 +435,166 @@ object Sinks {
       else merged
         .repartitionByRange(16, effStats.map(functions.col): _*)
         .sortWithinPartitions(effStats.head, effStats.tail: _*)
-    out.write.mode(SaveMode.Overwrite).parquet(s"$path/$staged")
-    writeVersionManifests(spark, s"$path/$staged", effStats, effBloom, out.schema)
-    publish(spark, path, staged)
+    Staged(out, effStats, Option(bloomCol).orElse(snap.bloomKey))
   }
 
-  /** The stats-manifest columns of the LIVE version, if it carries one —
-    * how the manifest CONTRACT propagates through every rewriting
-    * mutator: once a table is layout-maintained (a statsCols commit),
-    * compaction, tombstone purges, OPTIMIZE, and plain upserts must all
-    * re-establish the manifest on the version they publish, or the first
-    * unrelated maintenance run silently turns every skip-scan into a
-    * full scan. The column LIST rides explicitly inside the manifest
-    * (`stats_cols`, like `_bloom`'s key_col) — reverse-engineering it
-    * from `_min`/`_max` field-name suffixes mis-recovers a data column
-    * whose own name ends in `_min` (`price_min` → manifest fields
-    * `price_min_min`/`price_min_max` plus a phantom column `price`); the
-    * suffix parse survives only as the legacy-manifest fallback. */
-  private def liveStatsCols(spark: SparkSession, path: String): Seq[String] = {
-    val sp = new org.apache.hadoop.fs.Path(resolveTable(spark, path), "_stats")
-    if (!fsOf(spark, sp).exists(sp)) Nil
-    else {
-      val df = spark.read.parquet(sp.toString)
-      if (df.schema.fieldNames.contains("stats_cols"))
-        df.select("stats_cols").limit(1).collect().headOption
-          .map(_.getString(0).split(",").toSeq).getOrElse(Nil)
-      else df.schema.fieldNames.toSeq
-        .filter(_.endsWith("_min")).map(_.stripSuffix("_min"))
+  /** The upsert winner rule BOTH merge forms ([[upsertBatch]] and
+    * [[upsertBatchDv]]) run, so the two are interchangeable and replays
+    * converge on the same rows whichever form applied them:
+    *   - latest-per-key inside the batch;
+    *   - the total order (seq, xxhash64 of the name-sorted row) — the
+    *     name sort makes base and batch sides hash identically regardless
+    *     of physical column order;
+    *   - type parity for columns on both sides: a same-name-different-
+    *     type batch column would silently coerce in the merge (widening
+    *     the table on publish) or append mixed-type parquet next to the
+    *     base files (a bricked version), and int vs long also xxhash64
+    *     differently, breaking the replay tiebreak — evolution is
+    *     additive-only, so a type change fails loudly;
+    *   - `batchWins` over the `__b_`-prefixed batch side of the full-outer
+    *     key join: batch inserts, greater seq, or equal seq with the
+    *     greater-or-equal row hash.
+    * `newCols` (batch columns the base lacks — only the COW path admits
+    * them) hash as typed nulls on the base side: hashing only the base
+    * columns would order an evolving batch's rows without their new
+    * columns, and a replay AFTER the evolution (when those columns exist
+    * on both sides) could pick a different winner. */
+  private final case class MergeRule(latest: DataFrame, prefixed: DataFrame,
+      batchWins: org.apache.spark.sql.Column, newCols: Seq[String])
+
+  private def mergeRule(batch: DataFrame, base: StructType, keyCol: String,
+      seqCol: String): MergeRule = {
+    val newCols = batch.columns.filterNot(base.fieldNames.contains).toSeq
+    def rowHash(cols: Seq[String], prefix: String = "",
+        nulls: Seq[String] = Nil) =
+      functions.xxhash64(cols.sorted.map { c =>
+        if (nulls.contains(c)) functions.lit(null).cast(batch.schema(c).dataType)
+        else functions.col(s"$prefix$c")
+      }: _*)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keyCol)
+      .orderBy(functions.col(seqCol).desc, rowHash(batch.columns.toSeq).desc)
+    val latest = batch
+      .withColumn("__rn", functions.row_number().over(w))
+      .filter(functions.col("__rn") === 1).drop("__rn")
+    val typeClash = base.fieldNames.filter(batch.columns.contains).flatMap { c =>
+      val bt = base(c).dataType
+      val lt = batch.schema(c).dataType
+      if (bt == lt) None else Some(s"$c (table ${bt.sql}, batch ${lt.sql})")
+    }
+    if (typeClash.nonEmpty) throw new IllegalArgumentException(
+      "schema evolution is additive-only: the batch changes the type of " +
+        s"existing column(s) ${typeClash.mkString(", ")} — cast the batch " +
+        "to the table's types explicitly before merging")
+    val prefixed = latest.columns.foldLeft(latest) { (d, c) =>
+      d.withColumnRenamed(c, s"__b_$c")
+    }
+    val allCols = base.fieldNames.toSeq ++ newCols
+    val batchWins = functions.col(s"__b_$keyCol").isNotNull &&
+      (functions.col(keyCol).isNull ||
+        functions.col(s"__b_$seqCol") > functions.col(seqCol) ||
+        (functions.col(s"__b_$seqCol") === functions.col(seqCol) &&
+          rowHash(allCols, "__b_") >= rowHash(allCols, nulls = newCols)))
+    MergeRule(latest, prefixed, batchWins, newCols)
+  }
+
+  /** A table root's live state, resolved ONCE per mutator under its
+    * lease: the pointer lines (line 1 = live, later lines = retained
+    * predecessors), the live version dir (the root itself when there is
+    * no pointer), and — read on first use — the layout contract the
+    * live version carries. */
+  private final class Snapshot(spark: SparkSession, val path: String) {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs: org.apache.hadoop.fs.FileSystem = fsOf(spark, root)
+    val lines: Seq[String] = readPointerLines(fs, root)
+    val live: String = lines.headOption.map(n => s"$path/$n").getOrElse(path)
+
+    /** The stats-manifest columns of the live version, if it carries one
+      * — how the manifest CONTRACT propagates through every rewriting
+      * mutator: once a table is layout-maintained (a statsCols commit),
+      * compaction, tombstone purges, OPTIMIZE, and plain upserts must all
+      * re-establish the manifest on the version they publish, or the
+      * first unrelated maintenance run silently turns every skip-scan
+      * into a full scan. The column LIST rides explicitly inside the
+      * manifest (`stats_cols`, like `_bloom`'s key_col) —
+      * reverse-engineering it from `_min`/`_max` field-name suffixes
+      * mis-recovers a data column whose own name ends in `_min`
+      * (`price_min` → manifest fields `price_min_min`/`price_min_max`
+      * plus a phantom column `price`); the suffix parse survives only as
+      * the legacy-manifest fallback. */
+    lazy val statsCols: Seq[String] = {
+      val sp = new org.apache.hadoop.fs.Path(live, "_stats")
+      if (!fs.exists(sp)) Nil
+      else {
+        val df = spark.read.parquet(sp.toString)
+        if (df.schema.fieldNames.contains("stats_cols"))
+          df.select("stats_cols").limit(1).collect().headOption
+            .map(_.getString(0).split(",").toSeq).getOrElse(Nil)
+        else df.schema.fieldNames.toSeq
+          .filter(_.endsWith("_min")).map(_.stripSuffix("_min"))
+      }
+    }
+
+    /** The Bloom-manifest key column of the live version, if it carries
+      * one — the point-lookup half of the layout contract, propagated the
+      * same way; the key column NAME rides inside the manifest itself
+      * (`key_col`). */
+    lazy val bloomKey: Option[String] = {
+      val bp = new org.apache.hadoop.fs.Path(live, "_bloom")
+      if (!fs.exists(bp)) None
+      else spark.read.parquet(bp.toString).select("key_col").limit(1)
+        .collect().headOption.map(_.getString(0))
     }
   }
 
-  /** The Bloom-manifest key column of the LIVE version, if it carries
-    * one — the point-lookup half of the layout contract, propagated the
-    * same way as [[liveStatsCols]]. The key column NAME rides inside the
-    * manifest itself (`key_col`), so propagation needs no out-of-band
-    * metadata. */
-  private def liveBloomCol(spark: SparkSession, path: String): Option[String] = {
-    val bp = new org.apache.hadoop.fs.Path(resolveTable(spark, path), "_bloom")
-    if (!fsOf(spark, bp).exists(bp)) None
-    else spark.read.parquet(bp.toString).select("key_col").limit(1)
-      .collect().headOption.map(_.getString(0))
+  /** What a rewriting mutator stages: the new version's rows (already
+    * laid out), its manifest contract, and its hive partition columns. */
+  private final case class Staged(df: DataFrame, statsCols: Seq[String],
+      bloomCol: Option[String], partitionCols: Seq[String] = Nil)
+
+  /** The ONE copy-on-write commit every rewriting mutator
+    * ([[upsertBatch]], [[purgeTombstones]], [[compact]],
+    * [[optimizeClustered]]) runs, under the writer lease: resolve the
+    * live [[Snapshot]] once, sweep uncommitted stages (a crashed FIRST
+    * publish over a pointerless root leaves fully-staged orphan `data-*`
+    * dirs that the whole-root base read would sweep into the table —
+    * nothing there was ever committed, the pointer write IS the commit,
+    * so deleting them first makes replay after a crash at ANY point
+    * converge), build the new version from the snapshot, stage it fully
+    * to a fresh `data-*` dir (the base read is the live version, which
+    * the publish protocol keeps intact until one more cycle completes),
+    * write its commit manifests, and commit with the single fenced
+    * pointer swap. */
+  private def rewrite(spark: SparkSession, path: String)(
+      stage: Snapshot => Staged): Unit = withTableLock(spark, path) {
+    val snap = new Snapshot(spark, path)
+    sweepUncommittedStages(snap)
+    val st = stage(snap)
+    val staged = stageName()
+    val w = st.df.write.mode(SaveMode.Overwrite)
+    (if (st.partitionCols.nonEmpty) w.partitionBy(st.partitionCols: _*) else w)
+      .parquet(s"$path/$staged")
+    writeVersionManifests(spark, s"$path/$staged", st.statsCols, st.bloomCol,
+      st.df.schema)
+    publish(spark, snap, staged)
+  }
+
+  /** The skip-readers' one body: resolve the live version, select files
+    * from its pruning `manifest` (falling back to the full resolved scan
+    * when the version carries none — pruning is an optimization, never a
+    * correctness dependency), read them through [[readPruned]], and keep
+    * the exact `residual` filter (the manifest prune yields a superset). */
+  private def readSkipping(spark: SparkSession, path: String, manifest: String,
+      select: DataFrame => DataFrame,
+      residual: org.apache.spark.sql.Column): DataFrame = {
+    val live = resolveTable(spark, path)
+    val mp = new org.apache.hadoop.fs.Path(live, manifest)
+    val pruned =
+      if (!fsOf(spark, mp).exists(mp)) readVersionDir(spark, live)
+      else readPruned(spark, live, mp.toString,
+        select(spark.read.parquet(mp.toString))
+          .select("file").collect().map(_.getString(0)).toSeq)
+    pruned.filter(residual)
   }
 
   /** Bloom-skipping point lookup on a pointer-published table whose live
@@ -575,24 +609,15 @@ object Sinks {
     * correctness. Falls back to the full resolved scan without a
     * manifest. */
   def readTableBloomSkip(spark: SparkSession, path: String, keyCol: String,
-      keys: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    val live = resolveTable(spark, path)
-    val bp = new org.apache.hadoop.fs.Path(live, "_bloom")
-    val pruned =
-      if (!fsOf(spark, bp).exists(bp)) readVersionDir(spark, live)
-      else {
-        val hashes = keys.toDF("k")
-          .select(functions.xxhash64(functions.col("k")).as("h"))
-          .collect().map(_.getLong(0)).toSeq // |keys| — bounded probe state
-        val sel = spark.read.parquet(bp.toString)
-          .filter(graft.functions.BloomExprs.bloomAny(spark,
-            functions.col("bloom"), functions.typedLit(hashes)))
-          .select("file").collect().map(_.getString(0)).toSeq
-        readPruned(spark, live, s"$live/_bloom", sel)
-      }
-    pruned.filter(functions.col(keyCol).isin(keys: _*))
-  }
+      keys: Seq[Long]): DataFrame =
+    readSkipping(spark, path, "_bloom", { bloom =>
+      import spark.implicits._
+      val hashes = keys.toDF("k")
+        .select(functions.xxhash64(functions.col("k")).as("h"))
+        .collect().map(_.getLong(0)).toSeq // |keys| — bounded probe state
+      bloom.filter(graft.functions.BloomExprs.bloomAny(spark,
+        functions.col("bloom"), functions.typedLit(hashes)))
+    }, functions.col(keyCol).isin(keys: _*))
 
   /** `_files` — the version's COMMIT-LOGGED file set: one row per data
     * file written at publish (entry, dir = false, schema_json = the
@@ -614,11 +639,17 @@ object Sinks {
     * must (the soundness valve still fires there). */
   private[graft] val valveListings = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** A file path's bare URI path — the one rendering-insensitive key for
+    * comparing file names across sources (`_metadata.file_path` and
+    * listings render `file:/p`, input_file_name renders `file:///p`). */
+  private[graft] def norm(s: String): String =
+    new org.apache.hadoop.fs.Path(s).toUri.getPath
+
   /** Recursive data-file listing of a version dir (hidden `_`/`.` entries
     * skipped, the same filter Spark's own FileIndex applies) — used at
     * COMMIT time to build the manifests, and at READ time only as the
     * legacy valve for pre-`_files` versions. */
-  private def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
+  private[graft] def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return Nil
@@ -646,8 +677,6 @@ object Sinks {
     * [[valveListings]]). */
   private def readPruned(spark: SparkSession, live: String,
       manifestDir: String, sel: Seq[String]): DataFrame = {
-    def norm(s: String): String =
-      new org.apache.hadoop.fs.Path(s).toUri.getPath
     val known = spark.read.parquet(manifestDir)
       .select("file").collect().map(r => norm(r.getString(0))).toSet
     val fm = new org.apache.hadoop.fs.Path(live, FilesManifest)
@@ -655,16 +684,10 @@ object Sinks {
     // match dir entries by prefix and file entries exactly
     val (unknown, commitSchema) =
       if (fsOf(spark, fm).exists(fm)) {
-        val rows = spark.read.parquet(fm.toString)
-          .select("entry", "dir", "schema_json").collect()
-        val u = rows.iterator
-          .filter(r => r.getBoolean(1) || !known(norm(r.getString(0))))
-          .map(r => (r.getString(0), r.getBoolean(1))).toSeq.distinct
-        val sj = rows.iterator.flatMap(r => Option(r.getString(2)))
-          .toSeq.headOption.map(j =>
-            org.apache.spark.sql.types.DataType.fromJson(j)
-              .asInstanceOf[StructType])
-        (u, sj)
+        val (entries, sj) = readFilesLog(spark, fm)
+        (entries.filter { case (e, isDir) => isDir || !known(norm(e)) }.distinct,
+          sj.map(org.apache.spark.sql.types.DataType.fromJson(_)
+            .asInstanceOf[StructType]))
       } else {
         valveListings.incrementAndGet()
         (listDataFiles(spark, live).filterNot(p => known(norm(p)))
@@ -713,11 +736,11 @@ object Sinks {
     * non-null values — a NULL envelope, which every skip predicate
     * correctly never selects (exactly what min()/max() over the file
     * would produce). */
-  private[graft] case class FooterCell(ok: Boolean, hasVal: Boolean,
+  private case class FooterCell(ok: Boolean, hasVal: Boolean,
       lmin: Long, lmax: Long, dmin: Double, dmax: Double,
       smin: Array[Byte], smax: Array[Byte])
 
-  private[graft] case class FooterInfo(file: String, rows: Long,
+  private case class FooterInfo(file: String, rows: Long,
       cells: Seq[FooterCell])
 
   /** Merge helper: the empty cell (no values seen yet). */
@@ -729,7 +752,7 @@ object Sinks {
     * per-file row counts + per-statsCol min/max envelopes. File-count-
     * sized result — the same bounded metadata every manifest collect in
     * this protocol carries. */
-  private[graft] def readFooters(spark: SparkSession, files: Seq[String],
+  private def readFooters(spark: SparkSession, files: Seq[String],
       cols: Seq[(String, org.apache.spark.sql.types.DataType)]): Seq[FooterInfo] = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
@@ -742,7 +765,7 @@ object Sinks {
   /** One file's footer → row count + per-column envelope cells, merging
     * column-chunk statistics across the file's row groups. Runs on an
     * executor. */
-  private[graft] def readOneFooter(file: String,
+  private def readOneFooter(file: String,
       cols: Seq[(String, org.apache.spark.sql.types.DataType)],
       conf: org.apache.hadoop.conf.Configuration): FooterInfo = {
     import org.apache.spark.sql.types._
@@ -858,7 +881,7 @@ object Sinks {
   /** Footer cells → typed `_stats` manifest rows, or None when any file's
     * footer was unusable (the whole version then falls back to the
     * data-scan pass — correctness valve, never partial manifests). */
-  private[graft] def footerStatsRows(infos: Seq[FooterInfo],
+  private def footerStatsRows(infos: Seq[FooterInfo],
       dts: Seq[org.apache.spark.sql.types.DataType])
       : Option[Seq[org.apache.spark.sql.Row]] = {
     import org.apache.spark.sql.types._
@@ -888,75 +911,91 @@ object Sinks {
     })
   }
 
+  /** Per-file (file, c_min, c_max…) stats frame over `cols` for an
+    * explicit file list — the ONE manifest builder every stats manifest
+    * goes through (the commit-time `_stats`, the merge-on-read harvest,
+    * and the managed-table layout family in PipelineOps). Envelopes come
+    * from FOOTER metadata (O(files), no data pages); when any footer is
+    * unusable (INT96 timestamps, exotic types, omitted stats) it falls
+    * back to a column-pruned data scan of the files — loudly, because at
+    * 100 TB a silent fallback re-reads the data bytes per commit and the
+    * operator should know which file/column degraded the path. The scan
+    * anchors partition discovery at `basePath` when given, so a
+    * hive-partitioned version's partition-column envelopes survive.
+    * Also returns the files' max row count (from the same footer reads),
+    * the Bloom sketch capacity input. */
+  private[graft] def statsFrame(spark: SparkSession, files: Seq[String],
+      cols: Seq[String], schema: StructType,
+      basePath: String = null): (DataFrame, Long) = {
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val dts = cols.map(c => schema(c).dataType)
+    val footers = readFooters(spark, files, cols.zip(dts))
+    val maxRows = if (footers.nonEmpty) footers.map(_.rows).max else 0L
+    val frame = footerStatsRows(footers, dts) match {
+      case Some(rs) =>
+        spark.createDataFrame(rs.asJava, StructType(
+          StructField("file", StringType) +: cols.zip(dts).flatMap { case (c, dt) =>
+            Seq(StructField(s"${c}_min", dt), StructField(s"${c}_max", dt))
+          }))
+      case None =>
+        footers.iterator.flatMap(fi => fi.cells.zipWithIndex.collect {
+          case (c, i) if !c.ok => s"${fi.file} col=${cols(i)}"
+        }).take(3).foreach(m => System.err.println(
+          s"[graft] footer stats unusable ($m); falling back to data-scan stats pass"))
+        val aggs = cols.flatMap(c => Seq(
+          functions.min(c).as(s"${c}_min"), functions.max(c).as(s"${c}_max")))
+        val reader = spark.read.schema(schema)
+        Option(basePath).fold(reader)(reader.option("basePath", _))
+          .parquet(files: _*)
+          .groupBy(functions.input_file_name().as("file"))
+          .agg(aggs.head, aggs.tail: _*)
+    }
+    (frame, maxRows)
+  }
+
+  /** One Bloom sketch per file of `rows` over xxhash64(`keyCol`) — the
+    * ONE sketch build behind every `_bloom` manifest. Capacity comes from
+    * the files' REAL max rows-per-file (footer row counts — free), at ~10
+    * bits/key with a 40k-item floor: a fixed 40k-item sketch under a
+    * compacted multi-million-row file degrades to fpp≈1 and prunes
+    * nothing (correctness survives via the residual IN filter, but the
+    * index silently dies — the r17 ADVICE finding). */
+  private[graft] def bloomFrame(rows: DataFrame, keyCol: String,
+      maxRows: Long = 0L): DataFrame = {
+    graft.functions.BloomExprs.register(rows.sparkSession)
+    val estItems = math.max(40000L, maxRows)
+    rows.groupBy(functions.input_file_name().as("file"))
+      .agg(functions.expr(
+        s"graft_bloom_agg(xxhash64(`$keyCol`), ${estItems}L, ${estItems * 10L}L)")
+        .as("bloom"))
+  }
+
   /** Build the staged version's commit manifests: `_stats` (per-file
-    * min/max envelopes + the explicit `stats_cols` list) from FOOTER
-    * metadata, `_bloom` (per-file sketch over xxhash64 of the key,
-    * capacity sized from the version's real max rows-per-file so a
-    * post-compaction fat file doesn't saturate a fixed-size sketch — the
-    * r17 ADVICE finding) via the one data pass footers can't replace,
-    * and `_files` (the commit-logged file set + the version's read
-    * schema) that lets readers skip the filesystem listing entirely. ONE
-    * commit-time recursive listing of the fresh staged dir feeds all
-    * three. Falls back to the old column-pruned data-scan stats pass when
-    * any footer is unusable (INT96 timestamps, exotic types) — an
-    * optimization valve, never a correctness dependency. */
+    * min/max envelopes + the explicit `stats_cols` list, via
+    * [[statsFrame]]), `_bloom` (per-file sketch over xxhash64 of the key
+    * plus its `key_col`, via [[bloomFrame]] — the one data pass footers
+    * can't replace, column-pruned to the key), and `_files` (the
+    * commit-logged file set + the version's read schema) that lets
+    * readers skip the filesystem listing entirely. ONE commit-time
+    * recursive listing of the fresh staged dir feeds all three. */
   private def writeVersionManifests(spark: SparkSession, dir: String,
       statsCols: Seq[String], bloomCol: Option[String],
       schema: StructType): Unit = {
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
     val files = listDataFiles(spark, dir)
-    val footers =
-      if (files.isEmpty || (statsCols.isEmpty && bloomCol.isEmpty)) Nil
-      else readFooters(spark, files,
-        statsCols.map(c => (c, schema(c).dataType)))
-    val footerRows =
-      if (statsCols.isEmpty || files.isEmpty) None
-      else footerStatsRows(footers, statsCols.map(c => schema(c).dataType))
-    val statsColsLit = functions.lit(statsCols.mkString(","))
-    footerRows match {
-      case Some(rs) =>
-        val statsSchema = StructType(
-          StructField("file", StringType) +: statsCols.flatMap(c => Seq(
-            StructField(s"${c}_min", schema(c).dataType),
-            StructField(s"${c}_max", schema(c).dataType))))
-        spark.createDataFrame(rs.asJava, statsSchema)
-          .withColumn("stats_cols", statsColsLit)
-          .coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/_stats")
-      case None if statsCols.nonEmpty && files.nonEmpty =>
-        // data-scan fallback, column-pruned to statsCols. Loud: at 100 TB
-        // a silent fallback re-reads the version's data bytes per commit —
-        // the operator should know which file/column degraded the path.
-        footers.iterator.flatMap(fi => fi.cells.zipWithIndex.collect {
-          case (c, i) if !c.ok => s"${fi.file} col=${statsCols(i)}"
-        }).take(3).foreach(m => System.err.println(
-          s"[graft] footer stats unusable ($m); falling back to data-scan stats pass"))
-        val aggs = statsCols.flatMap(c => Seq(
-          functions.min(c).as(s"${c}_min"), functions.max(c).as(s"${c}_max")))
-        spark.read.parquet(dir)
-          .groupBy(functions.input_file_name().as("file"))
-          .agg(aggs.head, aggs.tail: _*)
-          .withColumn("stats_cols", statsColsLit)
-          .coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/_stats")
-      case _ => // no stats contract on this table
-    }
+    val (stats, maxRows) =
+      if (files.isEmpty || (statsCols.isEmpty && bloomCol.isEmpty))
+        (None, 0L)
+      else {
+        val (df, rows) = statsFrame(spark, files, statsCols, schema, dir)
+        (Some(df), rows)
+      }
+    if (statsCols.nonEmpty) stats.foreach(
+      _.withColumn("stats_cols", functions.lit(statsCols.mkString(",")))
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/_stats"))
     bloomCol.foreach { c =>
-      graft.functions.BloomExprs.register(spark)
-      // sketch capacity from the version's REAL max rows-per-file (footer
-      // row counts — free), keeping ~10 bits/key: a fixed 40k-item sketch
-      // under a compacted multi-million-row file degrades to fpp≈1 and
-      // prunes nothing (correctness survives via the residual IN filter,
-      // but the index silently dies — the r17 ADVICE finding)
-      val maxRows = if (footers.nonEmpty) footers.map(_.rows).max else 0L
-      val estItems = math.max(40000L, maxRows)
-      val numBits = estItems * 10L
-      spark.read.parquet(dir)
-        .groupBy(functions.input_file_name().as("file"))
-        .agg(functions.expr(
-          s"graft_bloom_agg(xxhash64(`$c`), ${estItems}L, ${numBits}L)")
-          .as("bloom"))
+      bloomFrame(spark.read.parquet(dir), c, maxRows)
         .withColumn("key_col", functions.lit(c))
         .coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/_bloom")
@@ -984,20 +1023,11 @@ object Sinks {
     * commit re-establishes the envelopes, so scan cost tracks the
     * predicate's data, not the table. */
   def readTableSkip(spark: SparkSession, path: String, col: String,
-      lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column): DataFrame = {
-    val live = resolveTable(spark, path)
-    val statsPath = new org.apache.hadoop.fs.Path(live, "_stats")
-    val pruned =
-      if (!fsOf(spark, statsPath).exists(statsPath)) readVersionDir(spark, live)
-      else {
-        val sel = spark.read.parquet(statsPath.toString)
-          .filter(functions.col(s"${col}_max") >= lo &&
-            functions.col(s"${col}_min") <= hi)
-          .select("file").collect().map(_.getString(0)).toSeq
-        readPruned(spark, live, s"$live/_stats", sel)
-      }
-    pruned.filter(functions.col(col).between(lo, hi))
-  }
+      lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column): DataFrame =
+    readSkipping(spark, path, "_stats",
+      _.filter(functions.col(s"${col}_max") >= lo &&
+        functions.col(s"${col}_min") <= hi),
+      functions.col(col).between(lo, hi))
 
   /** MERGE-with-DELETE's retention half: drop every row whose boolean
     * `deleteCol` is true from the live version and publish the shrunk
@@ -1007,21 +1037,14 @@ object Sinks {
     * filter the flag — so the tombstone ROW must survive until the
     * at-least-once replay horizon has drained: purging earlier lets a
     * stale replayed batch resurrect the key (the same contract as
-    * Delta's VACUUM vs time travel). Runs under the writer lease; one
-    * filter-and-rewrite cycle through the same staged publish as
-    * compaction. */
+    * Delta's VACUUM vs time travel). One filter-and-rewrite cycle
+    * through the shared [[rewrite]] commit, layout contract propagated. */
   def purgeTombstones(spark: SparkSession, path: String,
-      deleteCol: String): Unit = withTableLock(spark, path) {
-    sweepUncommittedStages(spark, path)
-    val statsCols = liveStatsCols(spark, path) // propagate the layout contract
-    val bloomKey = liveBloomCol(spark, path)
-    val df = readVersionDir(spark, resolveTable(spark, path))
+      deleteCol: String): Unit = rewrite(spark, path) { snap =>
+    Staged(readVersionDir(spark, snap.live)
       .filter(!functions.coalesce(
-        functions.col(deleteCol).cast("boolean"), functions.lit(false)))
-    val staged = stageName()
-    df.write.mode(SaveMode.Overwrite).parquet(s"$path/$staged")
-    writeVersionManifests(spark, s"$path/$staged", statsCols, bloomKey, df.schema)
-    publish(spark, path, staged)
+        functions.col(deleteCol).cast("boolean"), functions.lit(false))),
+      snap.statsCols, snap.bloomKey)
   }
 
   /** Small-file compaction for a parquet directory: one read, one
@@ -1033,27 +1056,14 @@ object Sinks {
     * scan cost proportional to bytes, not batch count. `partitionCols`
     * preserves an existing hive layout (the partition columns read back
     * as data columns and must be re-materialized as directories);
-    * `coalesce` (not repartition) keeps the rewrite shuffle-free. */
+    * `coalesce` (not repartition) keeps the rewrite shuffle-free. A
+    * compacted version keeps its manifest: envelopes are re-measured from
+    * the coalesced files (wider than a clustered write's — correct, just
+    * less selective until the next clustering commit). */
   def compact(spark: SparkSession, path: String, files: Int,
-      partitionCols: Seq[String] = Nil): Unit = withTableLock(spark, path) {
-    // resolve through the pointer so repeated compactions (and compaction
-    // after more writeBatch litter landed in the live version) read the
-    // current data dir; commit via the same atomic pointer swap. On a
-    // pointerless root, first drop crashed-stage `data-*` orphans the
-    // whole-root read would otherwise sweep in (see upsertBatch).
-    sweepUncommittedStages(spark, path)
-    val statsCols = liveStatsCols(spark, path) // propagate the layout contract
-    val bloomKey = liveBloomCol(spark, path)
-    val df = readVersionDir(spark, resolveTable(spark, path)).coalesce(files)
-    val staged = stageName()
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(s"$path/$staged")
-    // a compacted version keeps its manifest: envelopes are re-measured
-    // from the coalesced files (wider than a clustered write's — correct,
-    // just less selective until the next clustering commit)
-    writeVersionManifests(spark, s"$path/$staged", statsCols, bloomKey, df.schema)
-    publish(spark, path, staged)
+      partitionCols: Seq[String] = Nil): Unit = rewrite(spark, path) { snap =>
+    Staged(readVersionDir(spark, snap.live).coalesce(files),
+      snap.statsCols, snap.bloomKey, partitionCols)
   }
 
   /** OPTIMIZE as a LAKE COMMIT — the pointer-protocol form of a
@@ -1070,24 +1080,17 @@ object Sinks {
     * semantics). A legacy pointerless root is upgraded in place: the
     * first publish absorbs its root-level files into retirement after
     * the swap. Crash at any point leaves readers on a complete version
-    * (staged-dir litter is swept by the next mutator). */
+    * (staged-dir litter is swept by the next mutator). The optimized
+    * version keeps (tightened) envelopes on the table's established
+    * stats columns; a root without a manifest gets one on the sort
+    * columns — OPTIMIZE is the layout operator, its output should always
+    * be skippable. */
   def optimizeClustered(spark: SparkSession, path: String, files: Int,
-      sortCols: Seq[String]): Unit = withTableLock(spark, path) {
-    sweepUncommittedStages(spark, path)
-    val statsCols = liveStatsCols(spark, path) // propagate the layout contract
-    val bloomKey = liveBloomCol(spark, path)
-    val df = readVersionDir(spark, resolveTable(spark, path))
-    val staged = stageName()
-    df.repartitionByRange(files, sortCols.map(df.col): _*)
-      .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/$staged")
-    // the optimized version keeps (tightened) envelopes on the table's
-    // established stats columns; a pointerless legacy root without a
-    // manifest gets one on the sort columns — OPTIMIZE is the layout
-    // operator, its output should always be skippable
-    val cols = if (statsCols.nonEmpty) statsCols else sortCols
-    writeVersionManifests(spark, s"$path/$staged", cols, bloomKey, df.schema)
-    publish(spark, path, staged)
+      sortCols: Seq[String]): Unit = rewrite(spark, path) { snap =>
+    val df = readVersionDir(spark, snap.live)
+    Staged(df.repartitionByRange(files, sortCols.map(df.col): _*)
+        .sortWithinPartitions(sortCols.head, sortCols.tail: _*),
+      if (snap.statsCols.nonEmpty) snap.statsCols else sortCols, snap.bloomKey)
   }
 
   /** Bounded retry-on-conflict for single-table mutators — the writer
@@ -1119,22 +1122,6 @@ object Sinks {
     }
     throw new IllegalStateException("unreachable")
   }
-
-  /** [[upsertBatch]] with bounded conflict retry — see [[withWriterRetry]]. */
-  def upsertBatchRetry(batch: DataFrame, path: String, keyCol: String,
-      seqCol: String, statsCols: Seq[String] = Nil, bloomCol: String = null,
-      attempts: Int = 5): Unit =
-    withWriterRetry(attempts) {
-      upsertBatch(batch, path, keyCol, seqCol, statsCols, bloomCol)
-    }
-
-  /** [[optimizeClustered]] with bounded conflict retry — see
-    * [[withWriterRetry]]. */
-  def optimizeClusteredRetry(spark: SparkSession, path: String, files: Int,
-      sortCols: Seq[String], attempts: Int = 5): Unit =
-    withWriterRetry(attempts) {
-      optimizeClustered(spark, path, files, sortCols)
-    }
 
   /** Small-file COMPACTION for a BUCKETED catalog table: rewrite the same
     * rows under the same bucket spec with exactly ONE file per bucket.
@@ -1316,7 +1303,9 @@ object Sinks {
     * delete; restore on mismatch) and only runs while the lease is still
     * inside its validity window less [[ReleaseGraceMs]] — a holder that
     * overstayed leaves the file alone, because a reclaimer may
-    * legitimately own it by then. */
+    * legitimately own it by then. A release rename that still fails
+    * after two retries throws an IOException naming the stuck lease —
+    * never a silent success that strands `.LOCK` for [[LockStaleMs]]. */
   private def withTableLock[T](spark: SparkSession, path: String)(body: => T): T = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsOf(spark, root)
@@ -1325,18 +1314,18 @@ object Sinks {
     val token = java.util.UUID.randomUUID().toString
     def leaseAt(p: org.apache.hadoop.fs.Path): Option[(String, Long)] =
       try {
-        val in = fs.open(p)
-        val txt = try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-        txt.split("\n").map(_.trim) match {
+        readUtf8(fs, p).split("\n").map(_.trim) match {
           case Array(t, ts, _*) if ts.forall(_.isDigit) && ts.nonEmpty =>
             Some((t, ts.toLong))
           case _ => None // torn/empty write: a crashed acquire — stale
         }
       } catch { case _: java.io.IOException => None }
     def lease(): Option[(String, Long)] = leaseAt(lock)
+    // older than maxAgeMs, or unreadable (a torn write: a crashed creator)
+    def staleAt(p: org.apache.hadoop.fs.Path, maxAgeMs: Long): Boolean =
+      leaseAt(p).forall { case (_, ts) =>
+        System.currentTimeMillis() - ts > maxAgeMs
+      }
     def stamped: Array[Byte] =
       s"$token\n${System.currentTimeMillis()}\n"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -1374,19 +1363,14 @@ object Sinks {
           s"${LockStaleMs / 60000} min if it crashed")
     // best-effort restore of a file we turn out not to own: rename back,
     // or (if the slot was re-created meanwhile) drop our duplicate copy
-    def restore2(from: org.apache.hadoop.fs.Path,
+    def restore(from: org.apache.hadoop.fs.Path,
         to: org.apache.hadoop.fs.Path): Unit = {
       val back = try fs.rename(from, to)
       catch { case _: java.io.IOException => false }
       if (!back) fs.delete(from, false)
     }
-    def restore(from: org.apache.hadoop.fs.Path): Unit = restore2(from, lock)
     if (!tryAcquire()) {
-      val stale = lease() match {
-        case Some((_, ts)) => System.currentTimeMillis() - ts > LockStaleMs
-        case None => true // unreadable lease = crashed mid-create
-      }
-      if (!stale) fail()
+      if (!staleAt(lock, LockStaleMs)) fail()
       // reclaim mutex: serializes reclaimers WITHOUT ever emptying a
       // live holder's lock slot (the scaladoc's rename-aside
       // post-mortem). A fresh lease is never deleted: content is
@@ -1394,12 +1378,7 @@ object Sinks {
       val rmx = new org.apache.hadoop.fs.Path(root, s"$LockFile.reclaim")
       def tryMutex(): Boolean = tryCreateExclusive(rmx, stamped)
       if (!tryMutex()) {
-        val mutexStale = leaseAt(rmx) match {
-          case Some((_, ts)) =>
-            System.currentTimeMillis() - ts > ReclaimMutexStaleMs
-          case None => true // torn mutex write: a crashed reclaimer
-        }
-        if (!mutexStale) fail()
+        if (!staleAt(rmx, ReclaimMutexStaleMs)) fail()
         // SINGLE-WINNER sweep of the crashed reclaimer's mutex: a bare
         // delete-then-create would be the same TOCTOU the mutex exists
         // to close, one level down (two sweepers both delete, the
@@ -1413,12 +1392,7 @@ object Sinks {
         val won = try fs.rename(rmx, swept)
         catch { case _: java.io.IOException => false }
         if (!won) fail()
-        val movedStale = leaseAt(swept) match {
-          case Some((_, ts)) =>
-            System.currentTimeMillis() - ts > ReclaimMutexStaleMs
-          case None => true
-        }
-        if (!movedStale) { restore2(swept, rmx); fail() }
+        if (!staleAt(swept, ReclaimMutexStaleMs)) { restore(swept, rmx); fail() }
         fs.delete(swept, false)
         if (!tryMutex()) fail()
       }
@@ -1426,11 +1400,7 @@ object Sinks {
         // re-judge on the lease's CURRENT content — under the mutex the
         // only way it changes is vanishing entirely (a release), which
         // the acquire CAS below adjudicates anyway
-        val stillStale = lease() match {
-          case Some((_, ts)) => System.currentTimeMillis() - ts > LockStaleMs
-          case None => true
-        }
-        if (!stillStale) fail()
+        if (!staleAt(lock, LockStaleMs)) fail()
         fs.delete(lock, false)
         if (!tryAcquire()) fail()
       } finally fs.delete(rmx, false)
@@ -1439,26 +1409,49 @@ object Sinks {
     // commit-point fencing handle; map-keyed so a nested lease on a
     // different root composes instead of clobbering this one
     heldLeases.set(heldLeases.get() + (root.toUri.getPath -> token))
+    // release: only a lease that is provably still OURS — rename it to a
+    // holder-unique name first (atomic — nobody else can then touch it),
+    // verify it still carries our token, and only then delete; a foreign
+    // lease caught by the rename (a reclaimer racing the validity
+    // boundary) is restored. A transient rename failure is retried with
+    // writePointer's backoff; a lease that is gone was not ours to
+    // release. A rename that keeps failing must NOT pass for success: the
+    // stranded `.LOCK` would fail every later writer for LockStaleMs.
+    def release(): Unit = {
+      val rel = new org.apache.hadoop.fs.Path(root, s"$LockFile.release.$token")
+      val moved = (0 to 2).iterator.map { attempt =>
+        val ok = try fs.rename(lock, rel)
+        catch { case _: java.io.IOException => false }
+        if (ok) Some(true)
+        else if (!fs.exists(lock)) Some(false)
+        else if (attempt < 2) { Thread.sleep(20L << attempt); None }
+        else throw new java.io.IOException(
+          s"could not release the writer lease $lock (rename failed 3 times); " +
+            "the mutation committed, but later writers fail with " +
+            "ConcurrentWriterException until the lease is removed or goes " +
+            s"stale after ${LockStaleMs / 60000} min")
+      }.collectFirst { case Some(v) => v }.getOrElse(false)
+      if (moved) {
+        if (leaseAt(rel).exists(_._1 == token)) fs.delete(rel, false)
+        else restore(rel, lock)
+      }
+    }
+    var failure: Throwable = null
     try body
+    catch { case t: Throwable => failure = t; throw t }
     finally {
       heldLeases.set(heldLeases.get() - root.toUri.getPath)
-      // only release a lease that is provably still OURS: rename it to a
-      // holder-unique name first (atomic — nobody else can then touch
-      // it), verify it still carries our token, and only then delete;
-      // a foreign lease caught by the rename (a reclaimer racing the
-      // validity boundary) is restored. The window guard keeps an
-      // overstaying holder from touching the file at all, with
-      // ReleaseGraceMs covering the heldSince-vs-file-timestamp skew.
+      // The window guard keeps an overstaying holder from touching the
+      // file at all, with ReleaseGraceMs covering the
+      // heldSince-vs-file-timestamp skew. A release failure after a
+      // failed body rides along as suppressed; the body's error wins.
       if (System.currentTimeMillis() - heldSince <
-          LockStaleMs - ReleaseGraceMs) {
-        val rel = new org.apache.hadoop.fs.Path(root, s"$LockFile.release.$token")
-        val moved = try fs.rename(lock, rel)
-        catch { case _: java.io.IOException => false }
-        if (moved) {
-          if (leaseAt(rel).exists(_._1 == token)) fs.delete(rel, false)
-          else restore(rel)
+          LockStaleMs - ReleaseGraceMs)
+        try release()
+        catch {
+          case e: java.io.IOException if failure != null =>
+            failure.addSuppressed(e)
         }
-      }
     }
   }
 
@@ -1473,29 +1466,25 @@ object Sinks {
       root: org.apache.hadoop.fs.Path): Seq[String] = {
     val ptr = new org.apache.hadoop.fs.Path(root, PointerFile)
     if (!fs.exists(ptr)) Nil
-    else {
-      val in = fs.open(ptr)
-      try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      finally in.close()
-    }
+    else readUtf8(fs, ptr).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
-  private def readPointer(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[String] =
-    readPointerLines(fs, root).headOption
+  /** A small metadata file's whole content as UTF-8 — the one reader
+    * behind the pointer, lease, and snapshot files. */
+  private def readUtf8(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+      java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
 
   /** Resolve a table root through its `CURRENT` pointer to the live data
     * directory. A root without a pointer (a plain parquet dir, or the
     * streaming sink's raw `batch=` litter) resolves to itself, so every
     * reader can go through this unconditionally. */
-  def resolveTable(spark: SparkSession, path: String): String = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    readPointer(fsOf(spark, root), root)
-      .map(name => s"$path/$name").getOrElse(path)
-  }
+  def resolveTable(spark: SparkSession, path: String): String =
+    new Snapshot(spark, path).live
 
   /** The version's positional DELETION VECTORS: `_deletes` holds
     * (file, pos) rows naming deleted positions in the version's own data
@@ -1524,8 +1513,25 @@ object Sinks {
     * bricked-table failure mode and is semantically exact. */
   private def hasParquetFiles(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(dir) && fs.listStatus(dir).exists(st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet"))
+    parquetParts(fs, dir).nonEmpty
+
+  /** The parquet part files directly inside `dir` (none if it is absent). */
+  private def parquetParts(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath)
+
+  /** The `_files` commit log's (entry, is-dir) rows and the version's
+    * read schema JSON (carried by the publish-time rows). */
+  private def readFilesLog(spark: SparkSession, fm: org.apache.hadoop.fs.Path)
+      : (Seq[(String, Boolean)], Option[String]) = {
+    val rows = spark.read.parquet(fm.toString)
+      .select("entry", "dir", "schema_json").collect().toSeq
+    (rows.map(r => (r.getString(0), r.getBoolean(1))),
+      rows.flatMap(r => Option(r.getString(2))).headOption)
+  }
 
   /** Apply a version dir's deletion vectors to a frame read FROM ITS
     * FILES: anti-join on (_metadata.file_path, _metadata.row_index) —
@@ -1562,8 +1568,6 @@ object Sinks {
       val pruned = scanned match {
         case None => raw
         case Some((files, dirs)) =>
-          def norm(s: String): String =
-            new org.apache.hadoop.fs.Path(s).toUri.getPath
           val normCol = functions.regexp_replace(
             functions.regexp_replace(functions.col("file"),
               "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*", ""),
@@ -1575,15 +1579,25 @@ object Sinks {
             .foldLeft(fileKeep)((acc, p) => acc || normCol.startsWith(p))
           raw.filter(keep)
       }
-      val dels = pruned
-        .select(functions.col("file").as("__dv_file"),
-          functions.col("pos").as("__dv_pos"))
-        .distinct() // idempotent under replayed/duplicate delete appends
-      df.withColumn("__dv_file", functions.col("_metadata.file_path"))
-        .withColumn("__dv_pos", functions.col("_metadata.row_index"))
-        .join(dels, Seq("__dv_file", "__dv_pos"), "left_anti")
-        .drop("__dv_file", "__dv_pos")
+      joinPositions(df, pruned, "left_anti")
     }
+  }
+
+  /** Join a file-source frame to a (file, pos) vector set on
+    * (_metadata.file_path, _metadata.row_index) — `left_anti` hides the
+    * deleted rows (every DV reader), `left_semi` selects them
+    * ([[writeBatch]]'s replay reconciliation). The vectors are distinct'd
+    * first: idempotent under replayed/duplicate delete appends. */
+  private def joinPositions(df: DataFrame, vectors: DataFrame,
+      how: String): DataFrame = {
+    val dels = vectors
+      .select(functions.col("file").as("__dv_file"),
+        functions.col("pos").as("__dv_pos"))
+      .distinct()
+    df.withColumn("__dv_file", functions.col("_metadata.file_path"))
+      .withColumn("__dv_pos", functions.col("_metadata.row_index"))
+      .join(dels, Seq("__dv_file", "__dv_pos"), how)
+      .drop("__dv_file", "__dv_pos")
   }
 
   /** Merge-on-read DELETE: record every live row matching `predicate` as
@@ -1663,33 +1677,17 @@ object Sinks {
     // must not pay the whole-version read + merge join + staged writes
     // for zero rows (at 100 TB that is a full table scan per no-op)
     if (batch.isEmpty) return
-    upsertBatchDvNonEmpty(batch, path, keyCol, seqCol, deleteCol)
-  }
-
-  private def upsertBatchDvNonEmpty(batch: DataFrame, path: String,
-      keyCol: String, seqCol: String, deleteCol: String): Unit =
-    withTableLock(batch.sparkSession, path) {
     val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    require(readPointer(fsOf(spark, root), root).isDefined,
+    withTableLock(spark, path) {
+    val snap = new Snapshot(spark, path)
+    require(snap.lines.nonEmpty,
       s"upsertBatchDv needs a published table at $path (seed it with " +
         "upsertBatch first) — merge-on-read mutates a committed version")
-    val live = resolveTable(spark, path)
+    val live = snap.live
     // per-merge history: the FIRST merge on this version anchors the
     // epoch with a PRE-merge snapshot, so back=<merges> reaches the
     // published base state (VERDICT r19 #2)
-    if (snapFiles(fsOf(spark, new org.apache.hadoop.fs.Path(live)), live)
-        .isEmpty)
-      writeMergeSnapshot(spark, live)
-    // latest-wins within the batch, same tiebreak as the COW path
-    def rowHash(cols: Seq[String], prefix: String = "") =
-      functions.xxhash64(cols.sorted.map(c => functions.col(s"$prefix$c")): _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCol)
-      .orderBy(functions.col(seqCol).desc, rowHash(batch.columns.toSeq).desc)
-    val latest = batch
-      .withColumn("__rn", functions.row_number().over(w))
-      .filter(functions.col("__rn") === 1).drop("__rn")
+    if (snapFiles(snap.fs, live).isEmpty) writeMergeSnapshot(spark, live)
     // base rows with their physical positions, current vectors applied
     // (an already-deleted row must neither block an insert nor be
     // re-deleted at a second position)
@@ -1698,39 +1696,19 @@ object Sinks {
       .withColumn("__pos", functions.col("_metadata.row_index"))
     val base = applyDeletes(spark, live, baseRaw)
     val dataCols = base.columns.filterNot(Set("__file", "__pos")).toSeq
-    require(latest.columns.toSet == dataCols.toSet,
-      s"merge-on-read batch columns ${latest.columns.sorted.mkString(",")} " +
+    require(batch.columns.toSet == dataCols.toSet,
+      s"merge-on-read batch columns ${batch.columns.sorted.mkString(",")} " +
         s"must equal the table's ${dataCols.sorted.mkString(",")} — " +
         "additive evolution goes through upsertBatch")
-    // TYPE parity too (the COW path's own guard, same rationale): names
-    // alone would let a same-name-different-type batch append mixed-type
-    // parquet next to the base files — every later plain read of the
-    // version throws on the footer mismatch (a silently bricked table),
-    // and int-vs-long also xxhash64 differently, breaking the replay
-    // tiebreak. Fail loudly at the write instead.
-    val typeClash = dataCols.flatMap { c =>
-      val bt = base.schema(c).dataType
-      val lt = latest.schema(c).dataType
-      if (bt == lt) None else Some(s"$c (table ${bt.sql}, batch ${lt.sql})")
-    }
-    require(typeClash.isEmpty,
-      "merge-on-read batch changes the type of existing column(s) " +
-        s"${typeClash.mkString(", ")} — cast the batch to the table's " +
-        "types explicitly before merging")
-    val b = latest.columns.foldLeft(latest) { (d, c) =>
-      d.withColumnRenamed(c, s"__b_$c")
-    }
-    val baseHash = rowHash(dataCols)
-    val batchHash = rowHash(dataCols, "__b_")
-    val batchWins = functions.col(s"__b_$keyCol").isNotNull &&
-      (functions.col(keyCol).isNull ||
-        functions.col(s"__b_$seqCol") > functions.col(seqCol) ||
-        (functions.col(s"__b_$seqCol") === functions.col(seqCol) &&
-          batchHash >= baseHash))
+    // the shared winner rule, TYPE parity included: names alone would
+    // let a same-name-different-type batch append mixed-type parquet
+    // next to the base files (a silently bricked version)
+    val m = mergeRule(batch, StructType(dataCols.map(base.schema(_))),
+      keyCol, seqCol)
     // persisted: the full-outer merge join over the whole-version read is
     // the call's dominant cost, and BOTH outputs below consume it — a
     // bare plan would re-run the base scan + DV anti-join + join twice
-    val joined = base.join(b,
+    val joined = base.join(m.prefixed,
       functions.col(keyCol) === functions.col(s"__b_$keyCol"), "full_outer")
       .persist()
     // DISTINCT: a base holding duplicate rows for a key — exactly the
@@ -1741,7 +1719,7 @@ object Sinks {
     // duplicates). All N copies are the identical batch-side row, so the
     // distinct is deterministic; dvRows below intentionally keeps one
     // vector per superseded base COPY.
-    val winners = joined.filter(batchWins)
+    val winners = joined.filter(m.batchWins)
       .select(dataCols.map(c => functions.col(s"__b_$c").as(c)): _*)
       .distinct()
     // matched-DELETE clause: flagged winners retire their base row (the
@@ -1751,7 +1729,7 @@ object Sinks {
         functions.col(c).cast("boolean"), functions.lit(false)))
     }.getOrElse(winners)
     val dvRows = joined
-      .filter(functions.col(keyCol).isNotNull && batchWins)
+      .filter(functions.col(keyCol).isNotNull && m.batchWins)
       .select(functions.col("__file").as("file"),
         functions.col("__pos").as("pos"))
     // stage BOTH outputs first (hidden dot-dirs — invisible to readers
@@ -1772,37 +1750,24 @@ object Sinks {
       dvRows.repartition(1).write.mode(SaveMode.Overwrite)
         .parquet(stageDv.toString)
     } finally joined.unpersist(false)
-    val fs = fsOf(spark, stageData)
-    def partsOf(dir: org.apache.hadoop.fs.Path) = fs.listStatus(dir)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).toSeq
+    val fs = snap.fs
     // commit: data files in, log them, then the vectors
-    val landed = partsOf(stageData).map { p =>
+    val landed = parquetParts(fs, stageData).map { p =>
       val dst = new org.apache.hadoop.fs.Path(live, p.getName)
       if (!fs.rename(p, dst)) throw new java.io.IOException(
         s"merge-on-read commit: could not move $p into $live")
       dst.toString
     }
-    val fm = healedFilesLog(fs, live)
-    if (landed.nonEmpty && fs.exists(fm)) {
-      import spark.implicits._
-      landed.map(f => (f, false, null: String))
-        .toDF("entry", "dir", "schema_json")
-        .coalesce(1)
-        .write.mode(SaveMode.Append).parquet(fm.toString)
-      // same O(appends) commit-log growth bound as writeBatch: a table
-      // maintained by periodic MOR merges would otherwise regrow the
-      // per-append log file count the threshold exists to cap (we hold
-      // the lease here, so the rewrite runs directly)
-      maybeCompactFilesLog(spark, path, live)
-    }
+    // same O(appends) commit-log growth bound as writeBatch (we hold the
+    // lease here, so a due log fold runs directly)
+    appendFilesLog(spark, path, live, landed.map((_, false)))
     // harvest the landed files' envelopes into the pruning manifests so
     // skip/bloom reads can prune them (ADVICE r19 — unharvested MOR
     // appends are always-scanned, read amplification growing linearly
     // with merge batches until a rewriting commit)
-    if (landed.nonEmpty) harvestAppendedManifests(spark, path, live, landed)
+    if (landed.nonEmpty) harvestAppendedManifests(spark, snap, landed)
     val delDir = new org.apache.hadoop.fs.Path(live, DeletesManifest)
-    val dvParts = partsOf(stageDv)
+    val dvParts = parquetParts(fs, stageDv)
     if (dvParts.nonEmpty) {
       if (!fs.exists(delDir)) fs.mkdirs(delDir)
       dvParts.foreach { p =>
@@ -1816,6 +1781,7 @@ object Sinks {
     // record the post-merge visible state; a crash before this line means
     // the replayed (convergent) merge records it instead
     writeMergeSnapshot(spark, live)
+    }
   }
 
   /** Harvest the footer envelopes (and Bloom sketches) of files APPENDED
@@ -1830,58 +1796,35 @@ object Sinks {
     * the manifests' prune-only-what-you-cover contract: a crash before
     * either append leaves the landed files unknown to the manifests =
     * always scanned (sound); a crash between the two appends leaves one
-    * manifest richer (also sound). Unusable footers (exotic types) skip
-    * the stats append — the valve semantics, never partial rows. Runs
+    * manifest richer (also sound). Unusable footers (exotic types) take
+    * [[statsFrame]]'s loud data-scan fallback over the landed files. Runs
     * under the caller's lease; manifest file-count growth is folded by
     * the same threshold compaction as the `_files` log. */
-  private def harvestAppendedManifests(spark: SparkSession, rootPath: String,
-      live: String, landed: Seq[String]): Unit = {
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(live))
-    val statsDir = healedManifest(fs, live, "_stats")
-    val bloomDir = healedManifest(fs, live, "_bloom")
-    val statsCols =
-      if (hasParquetFiles(fs, statsDir)) liveStatsCols(spark, rootPath) else Nil
-    val bloomKey =
-      if (hasParquetFiles(fs, bloomDir)) liveBloomCol(spark, rootPath) else None
+  private def harvestAppendedManifests(spark: SparkSession, snap: Snapshot,
+      landed: Seq[String]): Unit = {
+    val live = snap.live
+    val statsDir = healedManifest(snap.fs, live, "_stats")
+    val bloomDir = healedManifest(snap.fs, live, "_bloom")
+    val statsCols = if (hasParquetFiles(snap.fs, statsDir)) snap.statsCols else Nil
+    val bloomKey = if (hasParquetFiles(snap.fs, bloomDir)) snap.bloomKey else None
     if (statsCols.isEmpty && bloomKey.isEmpty) return
     // footer-only reads: schema + per-file row counts + min/max envelopes
     val schema = spark.read.parquet(landed: _*).schema
-    val footers = readFooters(spark, landed,
-      statsCols.filter(schema.fieldNames.contains)
-        .map(c => (c, schema(c).dataType)))
-    if (statsCols.nonEmpty && statsCols.forall(schema.fieldNames.contains)) {
-      footerStatsRows(footers, statsCols.map(c => schema(c).dataType)) match {
-        case Some(rs) =>
-          val statsSchema = StructType(
-            StructField("file", StringType) +: statsCols.flatMap(c => Seq(
-              StructField(s"${c}_min", schema(c).dataType),
-              StructField(s"${c}_max", schema(c).dataType))))
-          spark.createDataFrame(rs.asJava, statsSchema)
-            .withColumn("stats_cols", functions.lit(statsCols.mkString(",")))
-            .coalesce(1)
-            .write.mode(SaveMode.Append).parquet(statsDir.toString)
-          maybeCompactManifest(spark, rootPath, live, "_stats")
-        case None => () // unusable footer: files stay unknown = always read
-      }
+    val harvest = statsCols.nonEmpty && statsCols.forall(schema.fieldNames.contains)
+    val (stats, maxRows) =
+      statsFrame(spark, landed, if (harvest) statsCols else Nil, schema, live)
+    if (harvest) {
+      stats.withColumn("stats_cols", functions.lit(statsCols.mkString(",")))
+        .coalesce(1)
+        .write.mode(SaveMode.Append).parquet(statsDir.toString)
+      maybeCompactManifest(spark, snap.path, live, "_stats")
     }
     bloomKey.filter(schema.fieldNames.contains).foreach { c =>
-      graft.functions.BloomExprs.register(spark)
-      // capacity from the landed files' REAL max rows-per-file, same
-      // sizing rule as the commit-time sketch build
-      val maxRows = if (footers.nonEmpty) footers.map(_.rows).max else 0L
-      val estItems = math.max(40000L, maxRows)
-      val numBits = estItems * 10L
-      spark.read.parquet(landed: _*)
-        .groupBy(functions.input_file_name().as("file"))
-        .agg(functions.expr(
-          s"graft_bloom_agg(xxhash64(`$c`), ${estItems}L, ${numBits}L)")
-          .as("bloom"))
+      bloomFrame(spark.read.parquet(landed: _*), c, maxRows)
         .withColumn("key_col", functions.lit(c))
         .coalesce(1)
         .write.mode(SaveMode.Append).parquet(bloomDir.toString)
-      maybeCompactManifest(spark, rootPath, live, "_bloom")
+      maybeCompactManifest(spark, snap.path, live, "_bloom")
     }
   }
 
@@ -1973,12 +1916,6 @@ object Sinks {
       .map(name => readVersionDir(spark, s"$path/$name"))
   }
 
-  /** Time-travel read, one publish back — the "what did this table say
-    * before the last MERGE/compaction" question every incident review
-    * asks first. Sugar over [[readTableVersion]](…, 1). */
-  def readTablePrevious(spark: SparkSession, path: String): Option[DataFrame] =
-    readTableVersion(spark, path, 1)
-
   // ---- Per-merge MOR snapshots -------------------------------------------
 
   /** Per-MERGE snapshot log for merge-on-read tables (VERDICT r19 #2):
@@ -2012,14 +1949,6 @@ object Sinks {
       .map(_.getPath).sortBy(_.getName)
   }
 
-  private def readTextFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
   /** Record the live version's CURRENT visible state as the next
     * `snap-%08d` entry: one `S<TAB>schema_json` line, one `F`/`D` line
     * per commit-logged file/dir entry, one `V` line per `_deletes` part.
@@ -2028,18 +1957,11 @@ object Sinks {
     * set). Caller holds the table lease. */
   private def writeMergeSnapshot(spark: SparkSession, live: String): Unit = {
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(live))
-    val fm = healedFilesLog(fs, live)
+    val fm = healedManifest(fs, live, FilesManifest)
     if (!hasParquetFiles(fs, fm)) return
-    val rows = spark.read.parquet(fm.toString)
-      .select("entry", "dir", "schema_json").collect()
-    val schemaJson = rows.iterator
-      .flatMap(r => Option(r.getString(2))).toSeq.headOption
-    val dvDir = new org.apache.hadoop.fs.Path(live, DeletesManifest)
-    val dvParts =
-      if (!fs.exists(dvDir)) Nil
-      else fs.listStatus(dvDir).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.toString)
+    val (entries, schemaJson) = readFilesLog(spark, fm)
+    val dvParts = parquetParts(fs,
+      new org.apache.hadoop.fs.Path(live, DeletesManifest)).map(_.toString)
     val dir = new org.apache.hadoop.fs.Path(live, SnapshotsDir)
     if (!fs.exists(dir)) fs.mkdirs(dir)
     val n = snapFiles(fs, live)
@@ -2047,9 +1969,8 @@ object Sinks {
       .maxOption.map(_ + 1).getOrElse(0)
     val sb = new StringBuilder
     sb.append("S\t").append(schemaJson.getOrElse("")).append('\n')
-    rows.map(r => (r.getString(0), r.getBoolean(1))).distinct.foreach {
-      case (e, isDir) =>
-        sb.append(if (isDir) "D\t" else "F\t").append(e).append('\n')
+    entries.distinct.foreach { case (e, isDir) =>
+      sb.append(if (isDir) "D\t" else "F\t").append(e).append('\n')
     }
     dvParts.foreach(p => sb.append("V\t").append(p).append('\n'))
     val tmp = new org.apache.hadoop.fs.Path(dir, f".snap-$n%08d.tmp")
@@ -2059,23 +1980,6 @@ object Sinks {
     if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(dir, f"snap-$n%08d")))
       throw new java.io.IOException(s"could not commit merge snapshot $n at $dir")
   }
-
-  /** [[applyDeletes]] over an EXPLICIT deletion-vector part-file list —
-    * the snapshot reader's form (a snapshot pins the DV state by part
-    * file, not by whatever `_deletes` holds now). */
-  private def applyDeletesFrom(spark: SparkSession, parts: Seq[String],
-      df: DataFrame): DataFrame =
-    if (parts.isEmpty) df
-    else {
-      val dels = spark.read.parquet(parts: _*)
-        .select(functions.col("file").as("__dv_file"),
-          functions.col("pos").as("__dv_pos"))
-        .distinct()
-      df.withColumn("__dv_file", functions.col("_metadata.file_path"))
-        .withColumn("__dv_pos", functions.col("_metadata.row_index"))
-        .join(dels, Seq("__dv_file", "__dv_pos"), "left_anti")
-        .drop("__dv_file", "__dv_pos")
-    }
 
   /** PER-MERGE time travel on a merge-on-read table: the visible state
     * `back` MERGES ago within the live version's epoch (back = 0 is the
@@ -2097,7 +2001,7 @@ object Sinks {
     // (count-1) - b
     val idx = snaps.length - 1 - back
     if (idx < 0) return None
-    val lines = readTextFile(fs, snaps(idx)).split("\n").toSeq
+    val lines = readUtf8(fs, snaps(idx)).split("\n").toSeq
     def tagged(t: String) =
       lines.filter(_.startsWith(t + "\t")).map(_.drop(2)).distinct
     val schema = lines.find(_.startsWith("S\t")).map(_.drop(2).trim)
@@ -2109,7 +2013,12 @@ object Sinks {
       return schema.map(s => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
     val reader = schema.map(spark.read.schema).getOrElse(spark.read)
-    Some(applyDeletesFrom(spark, tagged("V"), reader.parquet(entries: _*)))
+      .parquet(entries: _*)
+    // the snapshot pins its DV state by part file, not by whatever
+    // `_deletes` holds now
+    val dvParts = tagged("V")
+    Some(if (dvParts.isEmpty) reader
+      else joinPositions(reader, spark.read.parquet(dvParts: _*), "left_anti"))
   }
 
   private def stageName(): String =
@@ -2120,14 +2029,11 @@ object Sinks {
     * are crash litter a whole-root read must never sweep in. A pointered
     * root is untouched — its staged dirs are retired by [[publish]] /
     * collected by [[vacuum]]. */
-  private def sweepUncommittedStages(spark: SparkSession, path: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    if (fs.exists(root) && readPointer(fs, root).isEmpty)
-      fs.listStatus(root).foreach { st =>
-        if (st.getPath.getName.startsWith("data-")) fs.delete(st.getPath, true)
+  private def sweepUncommittedStages(snap: Snapshot): Unit =
+    if (snap.lines.isEmpty && snap.fs.exists(snap.root))
+      snap.fs.listStatus(snap.root).foreach { st =>
+        if (st.getPath.getName.startsWith("data-")) snap.fs.delete(st.getPath, true)
       }
-  }
 
   /** Write the pointer file's lines via the one atomic rename-with-
     * overwrite — the commit primitive [[publish]] and [[vacuum]] share.
@@ -2147,14 +2053,9 @@ object Sinks {
       // on an otherwise healthy holder is retried a couple of times
       // before aborting — a single flaky read must not kill a valid
       // commit and strand the staged dir as litter.
-      def readToken(): Option[String] = {
-        val in = fs.open(new org.apache.hadoop.fs.Path(root, LockFile))
-        val txt = try new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-        txt.split("\n").headOption.map(_.trim)
-      }
+      def readToken(): Option[String] =
+        readUtf8(fs, new org.apache.hadoop.fs.Path(root, LockFile))
+          .split("\n").headOption.map(_.trim)
       val owns = (0 to 2).iterator.map { attempt =>
         try Some(readToken().contains(token))
         catch {
@@ -2202,13 +2103,12 @@ object Sinks {
     * root-level files on first publish, and rolls the version that just
     * fell out of the history window into retirement. Runs under the
     * caller's table lock (every public mutator holds it). */
-  private def publish(spark: SparkSession, rootPath: String,
+  private def publish(spark: SparkSession, snap: Snapshot,
       stagedName: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(rootPath)
-    val fs = fsOf(spark, root)
-    val kept = (stagedName +: readPointerLines(fs, root)).take(HistoryKeep)
-    writePointer(spark, root, kept)
-    retireExcept(fs, root, Set(PointerFile, LockFile, ReclaimMutexFile) ++ kept)
+    val kept = (stagedName +: snap.lines).take(HistoryKeep)
+    writePointer(spark, snap.root, kept)
+    retireExcept(snap.fs, snap.root,
+      Set(PointerFile, LockFile, ReclaimMutexFile) ++ kept)
   }
 
   /** Version retention / VACUUM for a published table root — the
@@ -2231,8 +2131,9 @@ object Sinks {
     val fs = fsOf(spark, root)
     if (!fs.exists(root)) return
     withTableLock(spark, path) {
-      val lines = readPointerLines(fs, root)
-      if (lines.isEmpty) sweepUncommittedStages(spark, path)
+      val snap = new Snapshot(spark, path)
+      val lines = snap.lines
+      if (lines.isEmpty) sweepUncommittedStages(snap)
       else {
         val kept = if (retainPredecessor) lines else Seq(lines.head)
         if (kept != lines) writePointer(spark, root, kept)

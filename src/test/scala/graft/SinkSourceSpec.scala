@@ -300,7 +300,7 @@ class SinkSourceSpec extends SparkTestBase {
     import spk.implicits._
     val table = Files.createTempDirectory("graft_tt").toString + "/t"
     def prev(): Option[Set[(Long, String, Long)]] =
-      graft.sources.Sinks.readTablePrevious(spk, table)
+      graft.sources.Sinks.readTableVersion(spk, table, 1)
         .map(_.as[(Long, String, Long)].collect().toSet)
     // no pointer at all → no history
     assert(prev().isEmpty, "unpublished table cannot have a predecessor")
@@ -390,7 +390,7 @@ class SinkSourceSpec extends SparkTestBase {
     assert(afterDefault.count(_.startsWith("data-")) === 2,
       s"default vacuum must keep live + predecessor: $afterDefault")
     assert(state() === v2, "vacuum changed the live version")
-    assert(graft.sources.Sinks.readTablePrevious(spk, table).isDefined,
+    assert(graft.sources.Sinks.readTableVersion(spk, table, 1).isDefined,
       "default vacuum broke time travel")
     // shrink retention to the live version only: predecessor dir AND its
     // pointer line go; time travel reports None instead of dangling
@@ -399,7 +399,7 @@ class SinkSourceSpec extends SparkTestBase {
     assert(afterShrink.count(_.startsWith("data-")) === 1,
       s"shrinking vacuum must keep only the live version: $afterShrink")
     assert(state() === v2, "shrinking vacuum changed the live version")
-    assert(graft.sources.Sinks.readTablePrevious(spk, table).isEmpty,
+    assert(graft.sources.Sinks.readTableVersion(spk, table, 1).isEmpty,
       "shrinking vacuum left a dangling predecessor pointer line")
     // pointerless root: vacuum is exactly the uncommitted-stage sweep
     val bare = Files.createTempDirectory("graft_vacuum_bare").toString + "/t"
@@ -1005,13 +1005,15 @@ class SinkSourceSpec extends SparkTestBase {
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val threads = (1L to 2L).map { k =>
         new Thread(() =>
-          try graft.sources.Sinks.upsertBatchRetry(
-            Seq((k, s"w$k", 2L)).toDF("key", "v", "seq"), table, "key", "seq",
-            attempts = 20)
+          try graft.sources.Sinks.withWriterRetry(20) {
+            graft.sources.Sinks.upsertBatch(
+              Seq((k, s"w$k", 2L)).toDF("key", "v", "seq"), table, "key", "seq")
+          }
           catch { case t: Throwable => errs.add(t) })
       } :+ new Thread(() =>
-        try graft.sources.Sinks.optimizeClusteredRetry(spk, table, 2,
-          Seq("key"), attempts = 20)
+        try graft.sources.Sinks.withWriterRetry(20) {
+          graft.sources.Sinks.optimizeClustered(spk, table, 2, Seq("key"))
+        }
         catch { case t: Throwable => errs.add(t) })
       threads.foreach(_.start())
       threads.foreach(_.join(180000))
@@ -1641,7 +1643,7 @@ class SinkSourceSpec extends SparkTestBase {
     // live = folded (no vectors); one back = the retired vector-carrying
     // version — both must show the same logical rows
     assert(graft.sources.Sinks.readTable(spk, root).count() === expected)
-    val prev = graft.sources.Sinks.readTablePrevious(spk, root)
+    val prev = graft.sources.Sinks.readTableVersion(spk, root, 1)
     assert(prev.isDefined, "the pre-fold version must be retained")
     assert(prev.get.count() === expected,
       "time travel surfaced rows the retired version's vectors had deleted")
@@ -1709,4 +1711,90 @@ class SinkSourceSpec extends SparkTestBase {
     assert(graft.sources.Sinks.readTable(spk, root).count() === expected,
       "the fold lost rows or resurrected deleted ones")
   }
+
+  test("a failed lease release is retried, and a persistent one throws instead of stranding .LOCK") {
+    // Release renames `.LOCK` to `.LOCK.release.<token>` before deleting
+    // it; a rename that fails must neither pass for success (every later
+    // writer would hit ConcurrentWriterException until LockStaleMs) nor
+    // fail a commit a single retry would have released.
+    val spk = spark
+    import spk.implicits._
+    val table = Files.createTempDirectory("graft_release").toString + "/t"
+    def upsert(k: Long, v: String): Unit = graft.sources.Sinks.upsertBatch(
+      Seq((k, v, 1L)).toDF("key", "v", "seq"), table, "key", "seq")
+    upsert(1L, "a")
+    val lock = java.nio.file.Paths.get(s"$table/.LOCK")
+    val conf = spk.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+      .map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[ReleaseFailingFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try {
+      // one transient failure: retried, the upsert succeeds and releases
+      ReleaseFailingFs.failures.set(1)
+      upsert(2L, "b")
+      assert(ReleaseFailingFs.failures.get() === -1,
+        "expected exactly one failed and one successful release rename")
+      assert(!Files.exists(lock), "a retried release left .LOCK behind")
+      // persistent failure: loud, naming the lease; the commit landed
+      ReleaseFailingFs.failures.set(Int.MaxValue)
+      val e = intercept[java.io.IOException](upsert(3L, "c"))
+      assert(e.getMessage.contains(".LOCK") && e.getMessage.contains("committed"),
+        s"release failure does not name the stuck lease: ${e.getMessage}")
+      assert(Files.exists(lock))
+    } finally {
+      ReleaseFailingFs.failures.set(0)
+      saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
+    assert(graft.sources.Sinks.readTable(spk, table)
+      .as[(Long, String, Long)].collect().toSet ===
+      Set((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L)))
+  }
+
+  test("copy-on-write and merge-on-read upserts share one winner rule: same batches, same rows") {
+    // the two MERGE forms are documented as interchangeable; feed both
+    // the same batches — equal-seq ties with different payloads (within
+    // the batch and against the base), a stale replay, and an
+    // out-of-order replay — and require identical visible rows
+    val spk = spark
+    import spk.implicits._
+    val dir = Files.createTempDirectory("graft_mergerule").toString
+    val base = Seq((1L, "base-1", 1L), (2L, "base-2", 1L), (3L, "base-3", 1L),
+      (4L, "base-4", 5L)).toDF("key", "v", "seq")
+    val b1 = Seq((1L, "tie-a", 1L), (1L, "tie-b", 1L), (2L, "new-2", 2L),
+      (3L, "tie-3", 1L), (5L, "ins-5a", 1L), (5L, "ins-5b", 1L))
+    val b2 = Seq((2L, "stale-2", 1L), (4L, "stale-4", 4L), (6L, "ins-6", 1L))
+    val batches = Seq(b1, b2, b1).map(_.toDF("key", "v", "seq"))
+    val (cow, mor) = (s"$dir/cow", s"$dir/mor")
+    graft.sources.Sinks.upsertBatch(base, cow, "key", "seq")
+    graft.sources.Sinks.upsertBatch(base, mor, "key", "seq")
+    batches.foreach { b =>
+      graft.sources.Sinks.upsertBatch(b, cow, "key", "seq")
+      graft.sources.Sinks.upsertBatchDv(b, mor, "key", "seq")
+    }
+    def rows(p: String) = graft.sources.Sinks.readTable(spk, p)
+      .as[(Long, String, Long)].collect().toSet
+    val cowRows = rows(cow)
+    assert(cowRows === rows(mor), "the COW and MOR merges picked different winners")
+    assert(cowRows.toSeq.map(_._1).sorted === (1L to 6L),
+      s"expected exactly one row per key: $cowRows")
+    assert(cowRows.contains((2L, "new-2", 2L)) && cowRows.contains((4L, "base-4", 5L)),
+      s"a stale replay displaced a newer row: $cowRows")
+  }
+}
+
+/** Local filesystem whose renames onto a lease-release name
+  * (`.LOCK.release.*`) fail while [[ReleaseFailingFs.failures]] is
+  * positive — injects the release-path failure the lease spec needs. */
+class ReleaseFailingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    if (dst.getName.startsWith(".LOCK.release.") &&
+        ReleaseFailingFs.failures.getAndDecrement() > 0)
+      throw new java.io.IOException(s"injected rename failure onto $dst")
+    else super.rename(src, dst)
+}
+
+object ReleaseFailingFs {
+  val failures = new java.util.concurrent.atomic.AtomicInteger(0)
 }
