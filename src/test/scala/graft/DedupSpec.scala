@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Dedup operators on synthetic data: the fixtures contain no exact
   * duplicates (verified in FIXTURES.md), so Q31's collapse behavior and
@@ -574,5 +576,22 @@ class DedupSpec extends SparkTestBase {
     val after = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(after.isEmpty,
       s"releaseAll left ${after.size} persistent RDDs (ids $after) pinned")
+  }
+
+  test("q_dedup_incremental stays compiled: its third run compiles under 10 classes") {
+    // Spark's compiled-class cache is static (build.sbt's javaOptions size
+    // it); at the default 100 entries each repeat recompiled ~64 classes.
+    // By this suite the tier-1 JVM has filled all 1000 entries, and one
+    // full run saw a third run compile 2 classes, so a few are allowed.
+    val compiles = (1 to 3).map { _ =>
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      graft.operators.SketchDedup.qDedupIncremental.fn(spark, sf()).collect()
+      graft.sources.Scratch.releaseAll()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val perRun = s"compiles per run: ${compiles.mkString(", ")}"
+    assert(spark.conf.get(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key) === "1000",
+      s"the codegen cache size did not reach the session ($perRun)")
+    assert(compiles.last < 10L, perRun)
   }
 }
