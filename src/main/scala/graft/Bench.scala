@@ -261,9 +261,9 @@ object Bench {
         graft.sources.Sinks.deleteWhere(spark, s"$tmp/t",
           col("key") % 3 === 0)
         graft.sources.Sinks.compactDeletes(spark, s"$tmp/t", 0.05, 2)
-        graft.sources.Sinks.readTableSkip(spark, s"$tmp/t", "o_orderdate",
+        graft.sources.Sinks.readTableSkip(spark, s"$tmp/t", Seq(("o_orderdate",
           lit("1990-01-01 00:00:00").cast("timestamp"),
-          lit("2000-12-31 23:59:59").cast("timestamp")).count()
+          lit("2000-12-31 23:59:59").cast("timestamp")))).count()
         val docs = spark.read.parquet(s"$wdir/documents.parquet")
           .select("doc_id", "text", "lang")
         graft.operators.DedupIndex.write(

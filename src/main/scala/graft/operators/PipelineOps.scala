@@ -532,12 +532,13 @@ object PipelineOps {
       .orderBy("x")
 
   /** The z-order fixture frame: orders keyed to two 0..255 dims (customer
-    * slot, day-of-epoch slot) plus the measure the skip-scan aggregates. */
-  private def ordersXY(spark: SparkSession, dir: String): DataFrame =
+    * slot, day-of-epoch slot) plus the measure the skip-scan aggregates
+    * and the order key (the merge key of the append rows). */
+  private[graft] def ordersXY(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
       .select((col("o_custkey") % 256).as("x"),
         (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256).as("y"),
-        col("o_totalprice"))
+        col("o_totalprice"), col("o_orderkey").as("key"))
 
   /** Z-order (Morton) clustering-key profile — the data-LAYOUT half of a
     * 100 TB lake: a writer that sorts by the interleaved key
@@ -576,36 +577,35 @@ object PipelineOps {
       .orderBy("zbucket")
   }
 
-  /** Z-ordered clustered write + its per-file min/max stats MANIFEST —
-    * the table-format data-skipping contract (Delta/Iceberg file stats)
-    * as two managed tables: the data files sorted by the Morton key
-    * ([[graft.sources.Sinks.writeClustered]], each file one contiguous
-    * z interval) and a `_stats` table of one row per file carrying both
-    * dimensions' envelopes. The manifest costs one scan of the
-    * just-written data (what a format's writer accumulates for free) and
-    * is file-count-sized — metadata, never corpus-sized. */
-  /** Per-file min/max STATS manifest over `cols` for an already-written
-    * table — the generic half of the data-skipping contract (what a
-    * format's writer accumulates per file). Envelopes come from footer
-    * metadata (O(files), no data pages); the column-pruned scan survives
-    * only as the fallback for footer-unusable types. The manifest is
-    * file-count-sized metadata. */
-  private[graft] def statsWriteIndex(spark: SparkSession, table: String,
-      cols: Seq[String]): Unit = {
-    val stats = Sinks.statsFrame(spark,
-        Sinks.listDataFiles(spark, tableLocation(spark, table)),
-        cols, spark.table(table).schema)._1
-      // provenance flag: rows written by a clustered write are sorted on
-      // the layout key; append-refresh rows are not. OPTIMIZE rewrites
-      // exactly the unclustered files — the same bookkeeping a table
-      // format's log keeps, and far more reliable than inferring
-      // sortedness from envelope widths (z-range files straddling a
-      // high-order curve boundary have wide envelopes while being
-      // perfectly clustered).
-      .withColumn("clustered", lit(true))
-      .coalesce(1)
-    graft.sources.Sinks.writeClustered(stats, 1, Seq("file"), s"${table}_stats")
+  /** Clustered seed of a layout row: a plain parquet write of `df`, then
+    * ONE [[graft.sources.Sinks.optimizeClustered]] commit into 16 files
+    * on the curve `key` — the table-format data-skipping contract
+    * (Delta/Iceberg file stats) on the versioned table protocol: the
+    * OPTIMIZE upgrades the dir to a pointer-published version whose
+    * `_stats` manifest (footer-harvested, one row per file) carries
+    * envelopes on the key and on every `dims` column, inside the version
+    * and retired with it. */
+  private[graft] def clusteredSeed(df: DataFrame, root: String, key: String,
+      dims: Seq[String]): Unit = {
+    df.write.mode("overwrite").parquet(root)
+    Sinks.optimizeClustered(df.sparkSession, root, 16, key +: dims)
   }
+
+  /** The skip-read of an integer box (column, lo, hi per dimension)
+    * through the table's `_stats` manifest: only files whose envelopes
+    * intersect every range are read, and the exact box stays as the
+    * residual filter (the manifest prune yields a superset). */
+  private[graft] def boxSkip(spark: SparkSession, root: String,
+      box: (String, Int, Int)*): DataFrame =
+    Sinks.readTableSkip(spark, root,
+      box.map { case (c, lo, hi) => (c, lit(lo), lit(hi)) })
+
+  /** [[ordersXY]] keyed on its Morton curve, with a `seq` version column
+    * so merge-on-read appends ([[graft.sources.Sinks.upsertBatchDv]] on
+    * `key`) can land on it. */
+  private[graft] def zOrdersXY(spark: SparkSession, dir: String): DataFrame =
+    ordersXY(spark, dir).withColumn("zkey", morton(col("x"), col("y")))
+      .withColumn("seq", lit(1L))
 
   /** 3-D Morton interleave (8 bits per dimension, 24-bit key): bit 3i
     * from x, 3i+1 from y, 3i+2 from z. Three-or-more-column z-ordering
@@ -623,101 +623,25 @@ object PipelineOps {
         shiftleft(shiftright(z, i).bitwiseAND(1), 3 * i + 2)
     }.reduce(_ + _)
 
-  /** 3-D file-skipping scan: the [[zSkipScan]] shape with a third
-    * envelope dimension — manifest prune on the (x, y, z) box, read only
-    * intersecting files, keep the exact residual filter. */
-  private[graft] def zSkipScan3(spark: SparkSession, table: String,
-      xLo: Int, xHi: Int, yLo: Int, yHi: Int, zLo: Int, zHi: Int): DataFrame = {
-    val sel = spark.table(s"${table}_stats")
-      .filter(col("x_max") >= xLo && col("x_min") <= xHi &&
-        col("y_max") >= yLo && col("y_min") <= yHi &&
-        col("z_max") >= zLo && col("z_min") <= zHi)
-      .select("file").collect().map(_.getString(0)).toSeq
-    readFiles(spark, table, sel)
-      .filter(col("x").between(xLo, xHi) && col("y").between(yLo, yHi) &&
-        col("z").between(zLo, zHi))
-  }
-
-  private[graft] def zWriteWithStats3(df: DataFrame, table: String): Unit = {
-    graft.sources.Sinks.writeClustered(
-      df.withColumn("zkey3", morton3(col("x"), col("y"), col("z"))),
-      16, Seq("zkey3"), table)
-    statsWriteIndex(df.sparkSession, table, Seq("x", "y", "z"))
-  }
-
-  private[graft] def zWriteWithStats(df: DataFrame, table: String): Unit = {
-    graft.sources.Sinks.writeClustered(
-      df.withColumn("zkey", morton(col("x"), col("y"))), 16, Seq("zkey"), table)
-    statsWriteIndex(df.sparkSession, table, Seq("x", "y"))
-  }
-
-  /** INCREMENTAL stats-manifest refresh after an append — the O(batch)
-    * maintenance a format's commit performs: the table's file list is a
-    * METADATA read (filesystem listing of the managed location, never a
-    * table scan), files already in the manifest are skipped, and min/max
-    * stats are computed by reading ONLY the new files, then appended to
-    * the manifest table. Appended-unsorted files get wide envelopes —
-    * the skip-scan always selects them (correct, just unpruned) until a
-    * recluster tightens them; the sorted base keeps its tight stats. */
-  private[graft] def statsAppendIndex(spark: SparkSession, table: String,
-      cols: Seq[String]): Unit = {
-    // normalized URI paths (Sinks.norm): comparing raw strings would
-    // re-index (and then double-read) every base file. The listing is
-    // RECURSIVE (metadata op: one row per file): a PARTITIONED table's
-    // files live in p=.../ subdirectories — a flat listStatus would
-    // silently never index them and the skip-scan would prune forever
-    // against a stale manifest.
-    val known = spark.table(s"${table}_stats")
-      .select("file").collect().map(r => Sinks.norm(r.getString(0))).toSet
-    val fresh = Sinks.listDataFiles(spark, tableLocation(spark, table))
-      .filterNot(p => known(Sinks.norm(p)))
-    if (fresh.nonEmpty) {
-      Sinks.statsFrame(spark, fresh, cols, spark.table(table).schema)._1
-        .withColumn("clustered", lit(false)) // appended as-arrived, unsorted
-        .coalesce(1)
-        .write.format("parquet").mode("append")
-        .saveAsTable(s"${table}_stats")
-    }
-  }
-
-  /** Append → incremental manifest refresh → skip-scan, graded: the
-    * z-ordered base keeps its tight per-file envelopes, an UNSORTED
-    * batch is appended (its new files get wide envelopes from an
-    * O(batch) stats pass that never rescans the base), and the same
-    * two-dimensional box lookup stays correct — the oracle aggregates
-    * base+batch from the source, so a green hash proves the refreshed
-    * manifest loses nothing. ScaleSpec asserts the refresh added exactly
-    * the new files' rows and the scan still prunes the sorted base. */
+  /** Append → manifest harvest → skip-scan, graded: the z-ordered base
+    * keeps its tight per-file envelopes, an UNSORTED batch of new keys
+    * lands as a merge-on-read append ([[graft.sources.Sinks.upsertBatchDv]],
+    * whose commit harvests ONLY the landed files' footer envelopes into
+    * `_stats` — the O(batch) refresh that never rescans the base), and
+    * the same two-dimensional box lookup stays correct — the oracle
+    * aggregates base+batch from the source, so a green hash proves the
+    * refreshed manifest loses nothing. ScaleSpec asserts the harvest
+    * added exactly the landed files' rows and the scan still prunes the
+    * sorted base. */
   val qLayoutSkipAppend = Q(
     "q_layout_skip_append",
     boxLookupDuck
   ) { (spark, dir) =>
-    val table = Scans.rtTable("zskip_app")
-    val xy = ordersXY(spark, dir)
-    zWriteWithStats(xy.filter(col("x") % 4 =!= 0), table)
-    xy.filter(col("x") % 4 === 0)
-      .withColumn("zkey", morton(col("x"), col("y")))
-      .repartition(2) // the arriving micro-batch: 2 unsorted files
-      .write.format("parquet").mode("append").saveAsTable(table)
-    statsAppendIndex(spark, table, Seq("x", "y"))
-    boxLookupAgg(zSkipScan(spark, table, 32, 95, 64, 127))
-  }
-
-  /** File-skipping scan of a z-ordered table: consult the stats manifest,
-    * read ONLY the files whose (x, y) envelope intersects the predicate
-    * box, and keep the residual row filter for exactness (the manifest
-    * prune yields a superset). The manifest select is a bounded
-    * driver-side list — one row per FILE, the same metadata a table
-    * format's log replays — so at 100 TB the scan cost is proportional to
-    * the files the predicate touches, not the table. */
-  private[graft] def zSkipScan(spark: SparkSession, table: String,
-      xLo: Int, xHi: Int, yLo: Int, yHi: Int): DataFrame = {
-    val sel = spark.table(s"${table}_stats")
-      .filter(col("x_max") >= xLo && col("x_min") <= xHi &&
-        col("y_max") >= yLo && col("y_min") <= yHi)
-      .select("file").collect().map(_.getString(0)).toSeq
-    readFiles(spark, table, sel)
-      .filter(col("x").between(xLo, xHi) && col("y").between(yLo, yHi))
+    val root = Scans.rtDir("zskip_app")
+    val xy = zOrdersXY(spark, dir)
+    clusteredSeed(xy.filter(col("x") % 4 =!= 0), root, "zkey", Seq("x", "y"))
+    Sinks.upsertBatchDv(xy.filter(col("x") % 4 === 0), root, "key", "seq")
+    boxLookupAgg(boxSkip(spark, root, ("x", 32, 95), ("y", 64, 127)))
   }
 
   /** Z-order write → FILE-SKIPPING read, graded end-to-end: write orders
@@ -731,124 +655,40 @@ object PipelineOps {
     "q_layout_zorder_skip",
     boxLookupDuck
   ) { (spark, dir) =>
-    val table = Scans.rtTable("zskip")
-    zWriteWithStats(ordersXY(spark, dir), table)
-    boxLookupAgg(zSkipScan(spark, table, 32, 95, 64, 127))
+    val root = Scans.rtDir("zskip")
+    clusteredSeed(zOrdersXY(spark, dir), root, "zkey", Seq("x", "y"))
+    boxLookupAgg(boxSkip(spark, root, ("x", 32, 95), ("y", 64, 127)))
   }
 
-  /** Per-file BLOOM index — point-lookup data skipping for a column the
-    * sort order does NOT cover (where the stats manifest's min/max
-    * envelopes are useless because every file spans the full key
-    * domain): one Bloom sketch per data file over xxhash64(keyCol),
-    * built by the SAME graft_bloom_agg the semi-join prefilter uses, in
-    * one aggregate over the just-written table, persisted as a
-    * `_bloom` manifest table (file, bloom BINARY). This is the second
-    * half of a table format's file-stats contract (Delta/Iceberg bloom
-    * indexes beside min/max stats). */
-  private[graft] def bloomWriteIndex(spark: SparkSession, table: String,
-      keyCol: String): Unit =
-    Sinks.writeClustered(Sinks.bloomFrame(spark.table(table), keyCol)
-      .coalesce(1), 1, Seq("file"), s"${table}_bloom")
-
-  /** Bloom-skipping point lookup: test each probe key's xxhash64 against
-    * every file's Bloom sketch, read ONLY the files that may contain a
-    * key, and keep the exact IN filter so false positives cost I/O,
-    * never correctness. At 100 TB this is the difference between
-    * scanning the table and scanning the handful of files a key-set
-    * actually touches when the cluster key can't help. */
-  /** The may-contain probe of a key set against a `_bloom` manifest, as
-    * a DataFrame of surviving file names: the filter runs DISTRIBUTED
-    * over the manifest (graft_bloom_any deserializes + tests each file's
-    * sketch on the executor that holds its row) against the broadcast
-    * probe-hash array. The sketch BYTES never leave the executors — at
-    * 100 TB with O(10^5-10^6) files a driver-side collect of the blobs
-    * would be 5-50 GB of driver heap plus a single-threaded probe loop,
-    * in exactly the hot metadata path this index exists to accelerate.
-    * Only the file-NAME strings (one per surviving file) are collected. */
-  private[graft] def bloomSelectFilesDF(spark: SparkSession, table: String,
-      keys: Seq[Long]): DataFrame = {
-    import spark.implicits._
-    val hashes = keys.toDF("k").select(xxhash64(col("k")).as("h"))
-      .collect().map(_.getLong(0)).toSeq // |keys| rows — bounded probe state
-    spark.table(s"${table}_bloom")
-      .filter(graft.functions.BloomExprs.bloomAny(spark,
-        col("bloom"), typedLit(hashes)))
-      .select("file")
-  }
-
-  private[graft] def bloomSelectFiles(spark: SparkSession, table: String,
-      keys: Seq[Long]): Seq[String] =
-    bloomSelectFilesDF(spark, table, keys)
-      .collect().map(_.getString(0)).toSeq
-
-  /** Read an explicit file selection of a managed table. `basePath` is the
-    * table's catalog location, so hive-style partition values that exist
-    * ONLY in directory names (p=.../part-*.parquet) are recovered — a bare
-    * file-list read of a partitioned table would silently null the
-    * partition column while the full scan keeps it (the declared schema
-    * forces the column to exist either way, so nothing fails loudly).
-    * Every skip-scan's pruned read goes through here. */
-  private def readFiles(spark: SparkSession, table: String,
-      sel: Seq[String]): DataFrame =
-    if (sel.isEmpty) spark.table(table).limit(0)
-    else spark.read.schema(spark.table(table).schema)
-      .option("basePath", tableLocation(spark, table))
-      .parquet(sel: _*)
-
-  /** The catalog location of a managed/external table — the basePath every
-    * pruned file-list read must anchor to. */
-  private[graft] def tableLocation(spark: SparkSession, table: String): String =
-    spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).location.toString
-
-  private[graft] def bloomSkipScan(spark: SparkSession, table: String,
-      keyCol: String, keys: Seq[Long]): DataFrame =
-    readFiles(spark, table, bloomSelectFiles(spark, table, keys))
-      .filter(col(keyCol).isin(keys: _*))
-
-  /** COMBINED manifest pruning — the full data-skipping evaluation a
-    * table format runs per predicate: the stats manifest prunes on the
-    * clustered (range) dimension, the Bloom manifest prunes on the point
-    * key, and the scan reads only the INTERSECTION, with both exact
-    * residual filters kept. Each manifest alone over-selects (a date
-    * window keeps whole stripes; a key set keeps scattered files); the
-    * intersection is what makes multi-predicate lookups cheap at 100 TB. */
-  /** Path-rendering-proof file key: the stats manifest renders files as
-    * the filesystem listing does (file:/p, the footer-harvest source)
-    * while the Bloom manifest's come from input_file_name (file:///p) —
-    * a raw string equi-join of the two silently intersects to EMPTY
-    * (caught by ScaleSpec when the footer harvest landed). Collapse the
-    * scheme-slash multiplicity before joining. */
-  private def normFileKey(c: Column): Column =
-    regexp_replace(c, "^file:/+", "/")
-
-  private[graft] def comboSkipScan(spark: SparkSession, table: String,
-      keyCol: String, keys: Seq[Long], rangeCol: String,
-      lo: Column, hi: Column): DataFrame = {
-    // both manifest prunes evaluate on executors (the Bloom side via the
-    // distributed graft_bloom_any filter); the intersection is a manifest
-    // ∩ manifest equi-join on the NORMALIZED file key, and only the
-    // surviving names reach the driver
-    val statFiles = spark.table(s"${table}_stats")
-      .filter(col(s"${rangeCol}_max") >= lo && col(s"${rangeCol}_min") <= hi)
-      .select(normFileKey(col("file")).as("fkey"))
-    val sel = bloomSelectFilesDF(spark, table, keys)
-      .withColumn("fkey", normFileKey(col("file")))
-      .join(statFiles, "fkey")
-      .select("file")
-      .collect().map(_.getString(0)).toSeq
-    readFiles(spark, table, sel)
-      .filter(col(keyCol).isin(keys: _*) && col(rangeCol).between(lo, hi))
-  }
+  /** Bloom seed of a layout row: ONE [[graft.sources.Sinks.upsertBatch]]
+    * commit of line items clustered by ship date (the natural time
+    * layout, which scatters any given order across the key domain of
+    * every file) into 16 files, carrying a `_stats` manifest on the ship
+    * date and a per-file `_bloom` manifest over l_orderkey (built by the
+    * SAME graft_bloom_agg the semi-join prefilter uses) — the second half
+    * of a table format's file-stats contract (Delta/Iceberg bloom indexes
+    * beside min/max stats). The merge key is the row's scan position
+    * (monotonically_increasing_id, unique by construction): no column
+    * subset of the fixture's line items is a key at every scale — even
+    * (l_orderkey, l_linenumber) repeats — and a repeated merge key would
+    * drop rows. `li` must carry l_orderkey and l_shipdate. */
+  private[graft] def bloomSeed(li: DataFrame, root: String): Unit =
+    Sinks.upsertBatch(
+      li.withColumn("key", monotonically_increasing_id()).withColumn("seq", lit(1L)),
+      root, "key", "seq", statsCols = Seq("l_shipdate"), bloomCol = "l_orderkey")
 
   /** Stats + Bloom manifests composed, graded end-to-end: "these 5
     * orders' line items shipped in 1996" on the ship-date-clustered
-    * table — date-range prune via the per-file min/max stats on the sort
-    * column, key prune via the per-file Bloom index, scan the
-    * intersection. The oracle runs the same predicate on the source
-    * directly, so a green hash proves the composed prune is lossless;
-    * ScaleSpec asserts the intersection reads strictly fewer files than
-    * either manifest allows alone. */
+    * table — one skip-read whose box is the date range (pruned by the
+    * per-file min/max stats on the sort column) and whose keys are the
+    * orders (pruned by the per-file Bloom index), so it scans the
+    * INTERSECTION with both exact residual filters kept. Each manifest
+    * alone over-selects (a date window keeps whole stripes; a key set
+    * keeps scattered files); the intersection is what makes
+    * multi-predicate lookups cheap at 100 TB. The oracle runs the same
+    * predicate on the source directly, so a green hash proves the
+    * composed prune is lossless; ScaleSpec asserts the intersection reads
+    * strictly fewer files than either manifest allows alone. */
   val qLayoutSkipCombo = Q(
     "q_layout_skip_combo",
     s"""WITH k AS (
@@ -866,13 +706,9 @@ object PipelineOps {
   ) { (spark, dir) =>
     val lo = lit("1996-01-01 00:00:00").cast("timestamp")
     val hi = lit("1996-12-31 23:59:59").cast("timestamp")
-    val table = Scans.rtTable("comboskip")
-    graft.sources.Sinks.writeClustered(
-      Tables.lineitem(spark, dir)
-        .select("l_orderkey", "l_shipdate", "l_quantity"),
-      16, Seq("l_shipdate"), table)
-    statsWriteIndex(spark, table, Seq("l_shipdate"))
-    bloomWriteIndex(spark, table, "l_orderkey")
+    val root = Scans.rtDir("comboskip")
+    bloomSeed(Tables.lineitem(spark, dir)
+      .select("l_orderkey", "l_shipdate", "l_quantity"), root)
     // probe keys: the 5 smallest orders with an in-window shipment, so
     // the lookup provably has answers (5 rows — bounded probe state; the
     // oracle derives the identical set in its CTE)
@@ -880,7 +716,8 @@ object PipelineOps {
       .filter(col("l_shipdate").between(lo, hi))
       .select("l_orderkey").distinct().orderBy("l_orderkey").limit(5)
       .collect().map(_.getLong(0)).toSeq
-    comboSkipScan(spark, table, "l_orderkey", keys, "l_shipdate", lo, hi)
+    Sinks.readTableSkip(spark, root, Seq(("l_shipdate", lo, hi)),
+        Some(("l_orderkey", keys)))
       .groupBy("l_orderkey")
       .agg(count(lit(1)).cast("bigint").as("n_items"),
         Det.exactSum(col("l_quantity"), 100).as("sum_qty"))
@@ -888,15 +725,17 @@ object PipelineOps {
   }
 
   /** Bloom index write → file-skipping point lookup, graded end-to-end:
-    * lineitem clustered by ship date (the natural time layout, which
-    * scatters any given order across the key domain of every file),
-    * a per-file Bloom manifest over l_orderkey, and a 5-order lookup
-    * answered by reading only the may-contain files. The oracle runs the
-    * same lookup on the source directly, so a green hash proves the
-    * Bloom-pruned read is lossless; ScaleSpec asserts the strict-subset
-    * pruning. The probe keys are the 5 smallest 1-URGENT orderkeys —
-    * derived identically on both engines (the 5-row driver list is
-    * bounded probe state, like the oracle's CTE). */
+    * the ship-date-clustered [[bloomSeed]] table and a 5-order lookup
+    * answered by reading only the may-contain files (the sketch test runs
+    * distributed over the `_bloom` manifest, and the exact IN filter
+    * keeps false positives harmless). At 100 TB this is the difference
+    * between scanning the table and scanning the handful of files a
+    * key-set actually touches when the cluster key can't help. The oracle
+    * runs the same lookup on the source directly, so a green hash proves
+    * the Bloom-pruned read is lossless; ScaleSpec asserts the
+    * strict-subset pruning. The probe keys are the 5 smallest 1-URGENT
+    * orderkeys — derived identically on both engines (the 5-row driver
+    * list is bounded probe state, like the oracle's CTE). */
   val qLayoutBloomSkip = Q(
     "q_layout_bloom_skip",
     s"""WITH k AS (
@@ -909,17 +748,14 @@ object PipelineOps {
        |WHERE l_orderkey IN (SELECT o_orderkey FROM k)
        |GROUP BY 1 ORDER BY l_orderkey""".stripMargin
   ) { (spark, dir) =>
-    val table = Scans.rtTable("bloomskip")
-    graft.sources.Sinks.writeClustered(
-      Tables.lineitem(spark, dir)
-        .select("l_orderkey", "l_shipdate", "l_quantity", "l_extendedprice"),
-      16, Seq("l_shipdate"), table)
-    bloomWriteIndex(spark, table, "l_orderkey")
+    val root = Scans.rtDir("bloomskip")
+    bloomSeed(Tables.lineitem(spark, dir)
+      .select("l_orderkey", "l_shipdate", "l_quantity", "l_extendedprice"), root)
     val keys = Tables.orders(spark, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey").orderBy("o_orderkey").limit(5)
       .collect().map(_.getLong(0)).toSeq // 5 rows — bounded probe keys
-    bloomSkipScan(spark, table, "l_orderkey", keys)
+    Sinks.readTableSkip(spark, root, Nil, Some(("l_orderkey", keys)))
       .groupBy("l_orderkey")
       .agg(count(lit(1)).cast("bigint").as("n_items"),
         Det.exactSum(col("l_quantity"), 100).as("sum_qty"),
@@ -927,146 +763,47 @@ object PipelineOps {
       .orderBy("l_orderkey")
   }
 
-  /** OPTIMIZE — recluster a z-ordered table whose appends widened its
-    * envelopes: one full sort-rewrite into a fresh table (a production
-    * lake swaps it in via the pointer protocol; the graded row reads the
-    * optimized artifact directly) and a rebuilt stats manifest whose
-    * per-file envelopes are tight again. The cost model is the Delta
-    * OPTIMIZE ZORDER trade: pay one clustered rewrite of the table to
-    * restore file-skipping for every subsequent scan — worth it exactly
-    * when appended wide files start dominating scan cost. */
-  private[graft] def optimizeZOrdered(spark: SparkSession, src: String,
-      dst: String): Unit = {
-    graft.sources.Sinks.writeClustered(spark.table(src), 16, Seq("zkey"), dst)
-    statsWriteIndex(spark, dst, Seq("x", "y"))
-  }
-
-  /** The layout lifecycle's last step, graded end-to-end: z-write →
-    * unsorted append (wide envelopes, O(batch) manifest refresh) →
-    * OPTIMIZE (recluster + tight manifest) → the same box lookup over
-    * the optimized table. The oracle aggregates the source, so a green
-    * hash proves the rewrite lost and invented nothing; ScaleSpec
-    * asserts the optimize actually restores pruning (the tile box
-    * selects strictly fewer files than the post-append manifest). */
+  /** OPTIMIZE after a streaming arrival, graded end-to-end: z-write →
+    * unsorted micro-batch through [[graft.sources.Sinks.writeBatch]] (a
+    * `batch=` dir no manifest covers, so every skip-read keeps it) →
+    * OPTIMIZE ([[graft.sources.Sinks.optimizeClustered]]: recluster into
+    * a new version with a tight manifest) → the same box lookup. The
+    * cost model is the Delta OPTIMIZE ZORDER trade: pay one clustered
+    * rewrite of the table to restore file-skipping for every subsequent
+    * scan — worth it exactly when appended unpruned files start
+    * dominating scan cost. The oracle aggregates the source, so a green
+    * hash proves the rewrite lost and invented nothing; ScaleSpec asserts
+    * the optimize actually restores pruning. */
   val qLayoutOptimize = Q(
     "q_layout_optimize",
     boxLookupDuck
   ) { (spark, dir) =>
-    val table = Scans.rtTable("zskip_src")
-    val opt = Scans.rtTable("zskip_opt")
-    val xy = ordersXY(spark, dir)
-    zWriteWithStats(xy.filter(col("x") % 4 =!= 0), table)
-    xy.filter(col("x") % 4 === 0)
-      .withColumn("zkey", morton(col("x"), col("y")))
-      .repartition(2)
-      .write.format("parquet").mode("append").saveAsTable(table)
-    statsAppendIndex(spark, table, Seq("x", "y"))
-    optimizeZOrdered(spark, table, opt)
-    boxLookupAgg(zSkipScan(spark, opt, 32, 95, 64, 127))
+    val root = Scans.rtDir("zskip_opt")
+    val xy = zOrdersXY(spark, dir)
+    clusteredSeed(xy.filter(col("x") % 4 =!= 0), root, "zkey", Seq("x", "y"))
+    Sinks.writeBatch(xy.filter(col("x") % 4 === 0).repartition(2), root, 1L)
+    Sinks.optimizeClustered(spark, root, 16, Seq("zkey", "x", "y"))
+    boxLookupAgg(boxSkip(spark, root, ("x", 32, 95), ("y", 64, 127)))
   }
 
-  /** INCREMENTAL OPTIMIZE — the production form of [[optimizeZOrdered]]:
-    * rewrite cost must be proportional to the DELTA, not the table. The
-    * stats manifest already knows which files are wide (appended
-    * unsorted) and which are tight (the clustered base), so the
-    * recluster reads and sorts ONLY the wide files; tight files are
-    * adopted byte-for-byte into the optimized table (a filesystem copy
-    * here — a production lake adopts by REFERENCE in its commit log,
-    * zero data movement), and the new manifest is the tight rows with
-    * rewritten paths plus a stats pass over just the reclustered output.
-    * Wide-vs-tight is the manifest's PROVENANCE flag (clustered writes
-    * tag true, append-refresh tags false) — inferring sortedness from
-    * envelope widths fails on z-range files straddling high-order curve
-    * boundaries. Nothing in this path scans the tight base. Returns
-    * (tight-adopted, wide-rewritten) file counts for the caller's
-    * cost readout. */
-  private[graft] def optimizeIncremental(spark: SparkSession, src: String,
-      dst: String): (Int, Int) = {
-    val stats = spark.table(s"${src}_stats").collect() // manifest-sized
-    val (tight, wide) = stats.partition(_.getAs[Boolean]("clustered"))
-    val wideFiles = wide.map(_.getAs[String]("file")).toSeq
-    // recluster ONLY the wide files (the appended delta); a zero-delta
-    // OPTIMIZE (already fully clustered) must no-op-recluster, not crash
-    // on an empty parquet() path list — the empty limit(0) write still
-    // registers dst with the right schema, lands one rowless file the
-    // manifest never selects, and everything below adopts the base
-    val wideDf =
-      if (wideFiles.isEmpty) spark.table(src).limit(0)
-      else spark.read.schema(spark.table(src).schema).parquet(wideFiles: _*)
-    graft.sources.Sinks.writeClustered(wideDf, 4, Seq("zkey"), dst)
-    // adopt the tight files byte-for-byte
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dstLoc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(dst)))
-    val fs = dstLoc.getFileSystem(conf)
-    val adopted = tight.map { r =>
-      val from = new org.apache.hadoop.fs.Path(r.getAs[String]("file"))
-      val to = new org.apache.hadoop.fs.Path(dstLoc, from.getName)
-      org.apache.hadoop.fs.FileUtil.copy(fs, from, fs, to, false, conf)
-      (r, to.toString)
-    }
-    // O(delta) manifest build: tight rows spliced in with rewritten
-    // paths + a stats pass over ONLY the reclustered files (a full
-    // statsWriteIndex over dst would re-scan the adopted base and defeat
-    // the point)
-    // exclusion compares NORMALIZED URI paths (the statsAppendIndex norm):
-    // Path.toString ('file:/p') vs listStatus renderings ('file:///p' on
-    // qualified schemes) differ as raw strings, and a missed match would
-    // both rescan the adopted base (defeating O(delta)) and give each
-    // adopted file TWO manifest rows — double-counted by every skip-scan
-    val adoptedNorm = adopted.map(a => Sinks.norm(a._2)).toSet
-    val newFiles = fs.listStatus(dstLoc).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet"))
-      .filterNot(p => adoptedNorm(Sinks.norm(p))).toSeq
-    val spk = spark
-    import spk.implicits._
-    val adoptedStats = adopted.toSeq.map { case (r, path) =>
-      (path, r.getAs[Number]("x_min").intValue, r.getAs[Number]("x_max").intValue,
-        r.getAs[Number]("y_min").intValue, r.getAs[Number]("y_max").intValue,
-        true)
-    }.toDF("file", "x_min", "x_max", "y_min", "y_max", "clustered")
-    // a zero-delta optimize may emit no (or only rowless) recluster
-    // output: the manifest is then exactly the adopted rows
-    val manifest =
-      if (newFiles.isEmpty) adoptedStats
-      else
-        Sinks.statsFrame(spark, newFiles, Seq("x", "y"),
-            spark.table(src).schema)._1
-          .select(col("file"), col("x_min").cast("int"),
-            col("x_max").cast("int"), col("y_min").cast("int"),
-            col("y_max").cast("int"))
-          .toDF("file", "x_min", "x_max", "y_min", "y_max")
-          .withColumn("clustered", lit(true)) // the rewrite sorted them
-          .unionByName(adoptedStats)
-    graft.sources.Sinks.writeClustered(manifest.coalesce(1),
-      1, Seq("file"), s"${dst}_stats")
-    (adopted.length, wideFiles.length)
-  }
-
-  /** Incremental OPTIMIZE graded end-to-end: same lifecycle as
-    * [[qLayoutOptimize]] but the recluster touches ONLY the appended
-    * wide files — the tight base is adopted without being read. The
-    * oracle is the shared box lookup, so a green hash proves the
-    * delta-only rewrite (copy + recluster + manifest splice) loses and
-    * invents nothing; ScaleSpec asserts the O(delta) properties (base
-    * rows adopted with byte-identical stats, only the delta reclustered,
-    * pruning restored). */
+  /** OPTIMIZE after a merge-on-read append, graded end-to-end: the same
+    * lifecycle as [[qLayoutSkipAppend]] (z-write → unsorted new-key batch
+    * through [[graft.sources.Sinks.upsertBatchDv]], its landed files'
+    * wide envelopes harvested into `_stats`) followed by an OPTIMIZE
+    * commit that reclusters the version and re-tightens every envelope.
+    * The oracle is the shared box lookup, so a green hash proves append
+    * + harvest + recluster lose and invent nothing; ScaleSpec asserts
+    * the pruning the recluster restores. */
   val qLayoutOptimizeInc = Q(
     "q_layout_optimize_inc",
     boxLookupDuck
   ) { (spark, dir) =>
-    val table = Scans.rtTable("zskip_isrc")
-    val opt = Scans.rtTable("zskip_iopt")
-    val xy = ordersXY(spark, dir)
-    zWriteWithStats(xy.filter(col("x") % 4 =!= 0), table)
-    xy.filter(col("x") % 4 === 0)
-      .withColumn("zkey", morton(col("x"), col("y")))
-      .repartition(2)
-      .write.format("parquet").mode("append").saveAsTable(table)
-    statsAppendIndex(spark, table, Seq("x", "y"))
-    optimizeIncremental(spark, table, opt)
-    boxLookupAgg(zSkipScan(spark, opt, 32, 95, 64, 127))
+    val root = Scans.rtDir("zskip_inc")
+    val xy = zOrdersXY(spark, dir)
+    clusteredSeed(xy.filter(col("x") % 4 =!= 0), root, "zkey", Seq("x", "y"))
+    Sinks.upsertBatchDv(xy.filter(col("x") % 4 === 0), root, "key", "seq")
+    Sinks.optimizeClustered(spark, root, 16, Seq("zkey", "x", "y"))
+    boxLookupAgg(boxSkip(spark, root, ("x", 32, 95), ("y", 64, 127)))
   }
 
   /** Hilbert index on the 256×256 grid — the clustering curve with
@@ -1127,11 +864,9 @@ object PipelineOps {
     "q_layout_hilbert_skip",
     boxLookupDuck
   ) { (spark, dir) =>
-    val table = Scans.rtTable("hskip")
-    graft.sources.Sinks.writeClustered(
-      withHilbert(ordersXY(spark, dir)), 16, Seq("hkey"), table)
-    statsWriteIndex(spark, table, Seq("x", "y"))
-    boxLookupAgg(zSkipScan(spark, table, 32, 95, 64, 127))
+    val root = Scans.rtDir("hskip")
+    clusteredSeed(withHilbert(ordersXY(spark, dir)), root, "hkey", Seq("x", "y"))
+    boxLookupAgg(boxSkip(spark, root, ("x", 32, 95), ("y", 64, 127)))
   }
 
   /** 3-D Hilbert index via Skilling's transpose algorithm (Skilling 2004,
@@ -1227,16 +962,15 @@ object PipelineOps {
        |  AND z BETWEEN 0 AND 127
        |GROUP BY 1 ORDER BY x""".stripMargin
   ) { (spark, dir) =>
-    val table = Scans.rtTable("h3skip")
-    graft.sources.Sinks.writeClustered(
-      withHilbert3(ordersXYZ(spark, dir)), 16, Seq("hkey3"), table)
-    statsWriteIndex(spark, table, Seq("x", "y", "z"))
-    boxLookupAgg(zSkipScan3(spark, table, 32, 95, 64, 127, 0, 127))
+    val root = Scans.rtDir("h3skip")
+    clusteredSeed(withHilbert3(ordersXYZ(spark, dir)), root, "hkey3",
+      Seq("x", "y", "z"))
+    boxLookupAgg(boxSkip(spark, root, ("x", 32, 95), ("y", 64, 127), ("z", 0, 127)))
   }
 
   /** The 3-column fixture frame: orders keyed to three 0..255 dims
     * (customer slot, day-of-epoch slot, orderkey slot) + the measure. */
-  private def ordersXYZ(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def ordersXYZ(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
       .select((col("o_custkey") % 256).as("x"),
         (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256).as("y"),
@@ -1269,9 +1003,11 @@ object PipelineOps {
        |  AND z BETWEEN 0 AND 127
        |GROUP BY 1 ORDER BY x""".stripMargin
   ) { (spark, dir) =>
-    val table = Scans.rtTable("z3skip")
-    zWriteWithStats3(ordersXYZ(spark, dir), table)
-    boxLookupAgg(zSkipScan3(spark, table, 32, 95, 64, 127, 0, 127))
+    val root = Scans.rtDir("z3skip")
+    clusteredSeed(ordersXYZ(spark, dir)
+      .withColumn("zkey3", morton3(col("x"), col("y"), col("z"))),
+      root, "zkey3", Seq("x", "y", "z"))
+    boxLookupAgg(boxSkip(spark, root, ("x", 32, 95), ("y", 64, 127), ("z", 0, 127)))
   }
 
   /** OPTIMIZE as a pointer-protocol COMMIT, graded end-to-end: the
@@ -1349,7 +1085,7 @@ object PipelineOps {
         .withColumn("o_totalprice", col("o_totalprice") + 100)
         .withColumn("seq", lit(2L)), root, "key", "seq",
       statsCols = Seq("o_orderdate"))
-    graft.sources.Sinks.readTableSkip(spark, root, "o_orderdate", lo, hi)
+    graft.sources.Sinks.readTableSkip(spark, root, Seq(("o_orderdate", lo, hi)))
       .groupBy(month(col("o_orderdate")).cast("int").as("mo"))
       .agg(count(lit(1)).cast("bigint").as("n_orders"),
         Det.exactSum(col("o_totalprice"), 100).as("revenue"))
@@ -1362,7 +1098,7 @@ object PipelineOps {
     * MERGE KEY (which the date clustering scatters across every file's
     * full domain, so min/max can't prune it; the sketch can). A 5-key
     * lookup on the merged table is answered through
-    * [[graft.sources.Sinks.readTableBloomSkip]] — the may-contain test
+    * [[graft.sources.Sinks.readTableSkip]] — the may-contain test
     * runs distributed over the version's `_bloom` manifest, only
     * surviving file names reach the driver, and the exact IN filter
     * keeps false positives harmless. The oracle computes the merged
@@ -1401,7 +1137,7 @@ object PipelineOps {
       .filter(col("o_orderpriority") === "1-URGENT")
       .select("o_orderkey").orderBy("o_orderkey").limit(5)
       .collect().map(_.getLong(0)).toSeq
-    graft.sources.Sinks.readTableBloomSkip(spark, root, "key", keys)
+    graft.sources.Sinks.readTableSkip(spark, root, Nil, Some(("key", keys)))
       .select(col("key"), Det.units(col("o_totalprice"), 100).as("price_units"))
       .orderBy("key")
   }
@@ -1441,7 +1177,7 @@ object PipelineOps {
         .withColumn("seq", lit(1L)),
       root, "key", "seq", statsCols = Seq("o_orderdate"))
     graft.sources.Sinks.deleteWhere(spark, root, col("key") % 7 === 0)
-    graft.sources.Sinks.readTableSkip(spark, root, "o_orderdate", lo, hi)
+    graft.sources.Sinks.readTableSkip(spark, root, Seq(("o_orderdate", lo, hi)))
       .groupBy(month(col("o_orderdate")).cast("int").as("mo"))
       .agg(count(lit(1)).cast("bigint").as("n_orders"),
         Det.exactSum(col("o_totalprice"), 100).as("revenue"))
@@ -1509,7 +1245,7 @@ object PipelineOps {
       .withColumn("seq", lit(2L))
     graft.sources.Sinks.upsertBatchDv(
       updates.unionByName(inserts), root, "key", "seq")
-    graft.sources.Sinks.readTableSkip(spark, root, "o_orderdate", lo, hi)
+    graft.sources.Sinks.readTableSkip(spark, root, Seq(("o_orderdate", lo, hi)))
       .groupBy(month(col("o_orderdate")).cast("int").as("mo"))
       .agg(count(lit(1)).cast("bigint").as("n_orders"),
         Det.exactSum(col("o_totalprice"), 100).as("revenue"))
@@ -1611,7 +1347,7 @@ object PipelineOps {
       .withColumn("seq", lit(2L))
     graft.sources.Sinks.upsertBatchDv(
       deletes.unionByName(updates), root, "key", "seq", deleteCol = "deleted")
-    graft.sources.Sinks.readTableSkip(spark, root, "o_orderdate", lo, hi)
+    graft.sources.Sinks.readTableSkip(spark, root, Seq(("o_orderdate", lo, hi)))
       .groupBy(month(col("o_orderdate")).cast("int").as("mo"))
       .agg(count(lit(1)).cast("bigint").as("n_orders"),
         Det.exactSum(col("o_totalprice"), 100).as("revenue"))
@@ -1682,7 +1418,7 @@ object PipelineOps {
     graft.sources.Sinks.deleteWhere(spark, root, col("key") % 3 === 0)
     graft.sources.Sinks.compactDeletes(spark, root,
       maxDeletedFraction = 0.25, files = 4)
-    graft.sources.Sinks.readTableSkip(spark, root, "o_orderdate", lo, hi)
+    graft.sources.Sinks.readTableSkip(spark, root, Seq(("o_orderdate", lo, hi)))
       .groupBy(month(col("o_orderdate")).cast("int").as("mo"))
       .agg(count(lit(1)).cast("bigint").as("n_orders"),
         Det.exactSum(col("o_totalprice"), 100).as("revenue"))
@@ -1711,21 +1447,22 @@ object PipelineOps {
       |  CAST(MAX(doc_id) AS BIGINT) AS max_doc
       |FROM documents WHERE lang = 'de' AND source = 'src7'""".stripMargin
   ) { (spark, dir) =>
-    val table = Scans.rtTable("strskip")
+    val root = Scans.rtDir("strskip")
     val keyed = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       .withColumn("x",
         expr(s"${graft.functions.PortableHash.spark("lang")} % 256").cast("int"))
       .withColumn("y",
         expr(s"${graft.functions.PortableHash.spark("source")} % 256").cast("int"))
-    zWriteWithStats(keyed, table)
+    clusteredSeed(keyed.withColumn("zkey", morton(col("x"), col("y"))),
+      root, "zkey", Seq("x", "y"))
     // the probe's slot coordinates: 2 one-row lookups — bounded driver
     // state, the same md5 construction the writer used
     def slot(lit0: String): Int = spark.sql(
       s"SELECT CAST(${graft.functions.PortableHash.spark(s"'$lit0'")} % 256 AS INT)")
       .head().getInt(0)
     val (hx, hy) = (slot("de"), slot("src7"))
-    zSkipScan(spark, table, hx, hx, hy, hy)
+    boxSkip(spark, root, ("x", hx, hx), ("y", hy, hy))
       .filter(col("lang") === "de" && col("source") === "src7") // exact residual
       .agg(count(lit(1)).cast("bigint").as("n_docs"),
         sum("n_chars").cast("bigint").as("sum_chars"),

@@ -232,14 +232,6 @@ object VecIndex {
     }.foreach(_.unpersist(false))
   }
 
-  /** [[register]] for the IVF artifact: re-declare `_cent`/`_cell`. */
-  def ivfRegister(spark: SparkSession, name: String, centPath: String,
-      cellPath: String, buckets: Int = 4): Unit = {
-    Sinks.registerBucketed(spark, s"${name}_cent", centPath, Seq("label"), 1)
-    Sinks.registerBucketed(spark, s"${name}_cell", cellPath, Seq("label"),
-      buckets)
-  }
-
   /** Probe the persisted IVF index with a query batch (vec_id, embedding):
     * rank the read-back centroid table, search the `p` nearest cells,
     * exact-dot re-rank to top-k — `q_vec_ivf_probe2`'s output contract

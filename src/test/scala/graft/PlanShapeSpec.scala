@@ -741,37 +741,30 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("bloom-manifest probe is a distributed scan filter, not a driver loop") {
-    // bloomSelectFiles must evaluate the sketch test ON EXECUTORS (a
-    // Filter with graft_bloom_any over the manifest scan) and collect
-    // only surviving file names — pulling the sketch BYTES to the driver
-    // is 5-50 GB of heap + a single-threaded probe loop at 100 TB file
-    // counts, in exactly the hot metadata path the index accelerates.
-    import org.apache.spark.sql.functions._
+    // The skip reader's `_bloom` selection must evaluate the sketch test
+    // ON EXECUTORS (a Filter with graft_bloom_any over the manifest scan)
+    // and collect only surviving file names — pulling the sketch BYTES to
+    // the driver is 5-50 GB of heap + a single-threaded probe loop at
+    // 100 TB file counts, in exactly the hot metadata path the index
+    // accelerates.
     val spk = spark
-    val table = graft.operators.Scans.rtTable("bloomplan_spec")
-    try {
-      graft.sources.Sinks.writeClustered(
-        graft.sources.Tables.lineitem(spk, dir)
-          .select("l_orderkey", "l_shipdate"),
-        4, Seq("l_shipdate"), table)
-      graft.operators.PipelineOps.bloomWriteIndex(spk, table, "l_orderkey")
-      val keys = graft.sources.Tables.lineitem(spk, dir)
-        .select("l_orderkey").orderBy("l_orderkey").limit(2)
-        .collect().map(_.getLong(0)).toSeq
-      val probe = graft.operators.PipelineOps
-        .bloomSelectFilesDF(spk, table, keys)
-      val opt = probe.queryExecution.optimizedPlan.toString
-      assert(opt.contains("graft_bloom_any"),
-        s"manifest probe lost its distributed graft_bloom_any filter:\n$opt")
-      // the filter's child is the manifest RELATION (the probe plans as a
-      // scan-filter), not a pre-collected local row set
-      assert(opt.contains("Filter") && opt.toLowerCase.contains("relation"),
-        s"manifest probe is not a scan filter over the manifest:\n$opt")
-      assert(probe.collect().nonEmpty, "probe selected zero files")
-    } finally {
-      spk.sql(s"DROP TABLE IF EXISTS `$table`")
-      spk.sql(s"DROP TABLE IF EXISTS `${table}_bloom`")
-    }
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_bloomplan").toString + "/t"
+    graft.operators.PipelineOps.bloomSeed(graft.sources.Tables.lineitem(spk, dir)
+      .select("l_orderkey", "l_shipdate"), root)
+    val keys = graft.sources.Tables.lineitem(spk, dir)
+      .select("l_orderkey").orderBy("l_orderkey").limit(2)
+      .collect().map(_.getLong(0)).toSeq
+    val Seq((_, probe)) = graft.sources.Sinks.skipManifests(spk,
+      graft.sources.Sinks.resolveTable(spk, root), Nil, Some(("l_orderkey", keys)))
+    val opt = probe.queryExecution.optimizedPlan.toString
+    assert(opt.contains("graft_bloom_any"),
+      s"manifest probe lost its distributed graft_bloom_any filter:\n$opt")
+    // the filter's child is the manifest RELATION (the probe plans as a
+    // scan-filter), not a pre-collected local row set
+    assert(opt.contains("Filter") && opt.toLowerCase.contains("relation"),
+      s"manifest probe is not a scan filter over the manifest:\n$opt")
+    assert(probe.collect().nonEmpty, "probe selected zero files")
   }
 
   test("q_join_dpp plans dynamic partition pruning and reads fewer partitions than the table has") {
@@ -883,7 +876,7 @@ class PlanShapeSpec extends SparkTestBase {
     graft.sources.Sinks.deleteWhere(spk, root, col("key") % 7 === 0)
     val lo = lit("1990-01-01 00:00:00").cast("timestamp")
     val hi = lit("2000-12-31 23:59:59").cast("timestamp")
-    val df = graft.sources.Sinks.readTableSkip(spk, root, "o_orderdate", lo, hi)
+    val df = graft.sources.Sinks.readTableSkip(spk, root, Seq(("o_orderdate", lo, hi)))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("regexp_replace") &&
       (plan.contains("INSET") || plan.contains(" IN (") ||

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-mechanism artifacts: bucketed co-located joins (no shuffle) and
@@ -264,45 +265,71 @@ class ScaleSpec extends SparkTestBase {
     }
   }
 
+  /** A fresh table root for a layout spec. */
+  private def tmpRoot(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft_$tag").toString + "/t"
+
+  /** PipelineOps' layout fixtures over `name`'s orders. */
+  private def zOrdersXY(name: String = "sf0.01"): DataFrame =
+    graft.operators.PipelineOps.zOrdersXY(spark, sf(name))
+  private def ordersXYZ(): DataFrame =
+    graft.operators.PipelineOps.ordersXYZ(spark, sf("sf0.01"))
+
+  /** The live version's `_stats` manifest of table `root`. */
+  private def liveStats(root: String): DataFrame = spark.read.parquet(
+    s"${graft.sources.Sinks.resolveTable(spark, root)}/_stats")
+
+  /** `root`'s `_stats` rows whose envelopes intersect every range of `box`. */
+  private def boxSel(root: String, box: (String, Int, Int)*): DataFrame =
+    liveStats(root).filter(box.map { case (c, lo, hi) =>
+      col(s"${c}_max") >= lo && col(s"${c}_min") <= hi
+    }.reduce(_ && _))
+
+  /** Normalized URI paths of a frame's `file` column (footer-harvested
+    * manifests render `file:/p`, input_file_name renders `file:///p`). */
+  private def fileSet(df: DataFrame): Set[String] =
+    df.select("file").collect()
+      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath).toSet
+
+  /** Order-free (count, exact price sum) signature of a frame. */
+  private def priceSig(df: DataFrame): org.apache.spark.sql.Row =
+    df.agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
+
+  /** The Bloom seed's line items, and the seeded table at `root` — the
+    * seed must keep every line item under its own merge key. */
+  private def bloomSeeded(root: String): DataFrame = {
+    val li = graft.sources.Tables.lineitem(spark, sf("sf0.01"))
+      .select("l_orderkey", "l_shipdate", "l_quantity")
+    graft.operators.PipelineOps.bloomSeed(li, root)
+    val t = graft.sources.Sinks.readTable(spark, root)
+    assert(t.count() === li.count() && t.select("key").distinct().count() === li.count(),
+      "the Bloom seed lost line items or repeated a merge key")
+    li
+  }
+
   test("z-order skip-scan reads a STRICT subset of files, losing no rows") {
     // The pruning half of q_layout_zorder_skip (the oracle hash proves
     // correctness; THIS proves the scan-cost win): after the z-ordered
-    // write, a two-dimensional predicate box selects strictly fewer
-    // manifest files than the table holds, and the pruned read's result
-    // is exactly the full table's filtered result. A one-tile box is
-    // used so strictness holds even at sf0.001's 16 near-empty files.
+    // clustered seed, a two-dimensional predicate box selects strictly
+    // fewer manifest files than the table holds, and the pruned read's
+    // result is exactly the full table's filtered result. A one-tile box
+    // is used so strictness holds even at sf0.001's 16 near-empty files.
     val spk = spark
-    val table = graft.operators.Scans.rtTable("zskip_spec")
-    val src = graft.sources.Tables.orders(spk, sf("sf0.01"))
-      .select((col("o_custkey") % 256).as("x"),
-        (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256).as("y"),
-        col("o_totalprice"))
-    try {
-      graft.operators.PipelineOps.zWriteWithStats(src, table)
-      val total = spk.table(s"${table}_stats").count()
-      val selected = spk.table(s"${table}_stats")
-        .filter(col("x_max") >= 32 && col("x_min") <= 47 &&
-          col("y_max") >= 96 && col("y_min") <= 111)
-        .count()
-      info(s"manifest: $selected of $total files intersect the tile box")
-      assert(selected < total,
-        s"skip-scan pruned nothing: $selected of $total files selected")
-      assert(selected > 0, "tile box selected zero files — fixture drift?")
-      val pruned = graft.operators.PipelineOps
-        .zSkipScan(spk, table, 32, 47, 96, 111)
-        .groupBy().agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long")))
-        .head()
-      val full = spk.table(table)
-        .filter(col("x").between(32, 47) && col("y").between(96, 111))
-        .groupBy().agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long")))
-        .head()
-      assert(pruned === full,
-        s"pruned scan diverged from full filter: $pruned vs $full")
-      assert(pruned.getLong(0) > 0, "tile box matched zero rows — widen it")
-    } finally {
-      spk.sql(s"DROP TABLE IF EXISTS `$table`")
-      spk.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
-    }
+    val root = tmpRoot("zskip_spec")
+    graft.operators.PipelineOps.clusteredSeed(zOrdersXY(), root, "zkey", Seq("x", "y"))
+    val total = liveStats(root).count()
+    val selected = boxSel(root, ("x", 32, 47), ("y", 96, 111)).count()
+    info(s"manifest: $selected of $total files intersect the tile box")
+    assert(selected < total,
+      s"skip-scan pruned nothing: $selected of $total files selected")
+    assert(selected > 0, "tile box selected zero files — fixture drift?")
+    val pruned = priceSig(graft.operators.PipelineOps
+      .boxSkip(spk, root, ("x", 32, 47), ("y", 96, 111)))
+    val full = priceSig(graft.sources.Sinks.readTable(spk, root)
+      .filter(col("x").between(32, 47) && col("y").between(96, 111)))
+    assert(pruned === full,
+      s"pruned scan diverged from full filter: $pruned vs $full")
+    assert(pruned.getLong(0) > 0, "tile box matched zero rows — widen it")
   }
 
   test("bloom skip-scan reads a STRICT subset of files, losing no rows") {
@@ -313,44 +340,41 @@ class ScaleSpec extends SparkTestBase {
     // can), and the pruned read must equal the full table's IN filter.
     val spk = spark
     import spk.implicits._
-    val table = graft.operators.Scans.rtTable("bloomskip_spec")
-    try {
-      graft.sources.Sinks.writeClustered(
-        graft.sources.Tables.lineitem(spk, sf("sf0.01"))
-          .select("l_orderkey", "l_shipdate", "l_quantity"),
-        16, Seq("l_shipdate"), table)
-      graft.operators.PipelineOps.bloomWriteIndex(spk, table, "l_orderkey")
-      val keys = graft.sources.Tables.lineitem(spk, sf("sf0.01"))
-        .select("l_orderkey").orderBy("l_orderkey").limit(3)
-        .collect().map(_.getLong(0)).toSeq
-      val total = spk.table(s"${table}_bloom").count()
-      val pruned = graft.operators.PipelineOps
-        .bloomSkipScan(spk, table, "l_orderkey", keys)
-      val prunedFiles = pruned.select(input_file_name()).distinct().count()
-      info(s"bloom manifest: lookup touched <= $prunedFiles of $total files")
-      val agg = pruned.groupBy()
-        .agg(count(lit(1)), sum((col("l_quantity") * 100).cast("long"))).head()
-      val full = spk.table(table).filter(col("l_orderkey").isin(keys: _*))
-        .groupBy()
-        .agg(count(lit(1)), sum((col("l_quantity") * 100).cast("long"))).head()
-      assert(agg === full,
-        s"bloom-pruned scan diverged from full filter: $agg vs $full")
-      assert(agg.getLong(0) > 0, "probe keys matched zero rows")
-      // strictness on the SELECTED file list, not just the touched one:
-      // re-derive the selection the scan used
-      val hashes = keys.toDF("k").select(xxhash64(col("k"))).collect().map(_.getLong(0))
-      val selected = spk.table(s"${table}_bloom").collect().count { r =>
-        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("bloom")))
-        hashes.exists(bf.mightContainLong)
-      }
-      info(s"bloom manifest: $selected of $total files selected")
-      assert(selected < total,
-        s"bloom skip pruned nothing: $selected of $total files selected")
-    } finally {
-      spk.sql(s"DROP TABLE IF EXISTS `$table`")
-      spk.sql(s"DROP TABLE IF EXISTS `${table}_bloom`")
+    val root = tmpRoot("bloomskip_spec")
+    val li = bloomSeeded(root)
+    val keys = li.select("l_orderkey").orderBy("l_orderkey").limit(3)
+      .collect().map(_.getLong(0)).toSeq
+    val live = graft.sources.Sinks.resolveTable(spk, root)
+    val bloom = spk.read.parquet(s"$live/_bloom")
+    val total = bloom.count()
+    val pruned = graft.sources.Sinks
+      .readTableSkip(spk, root, Nil, Some(("l_orderkey", keys)))
+    val prunedFiles = pruned.select(input_file_name()).distinct().count()
+    info(s"bloom manifest: lookup touched <= $prunedFiles of $total files")
+    val agg = pruned.groupBy()
+      .agg(count(lit(1)), sum((col("l_quantity") * 100).cast("long"))).head()
+    val full = graft.sources.Sinks.readTable(spk, root).filter(col("l_orderkey").isin(keys: _*))
+      .groupBy()
+      .agg(count(lit(1)), sum((col("l_quantity") * 100).cast("long"))).head()
+    assert(agg === full,
+      s"bloom-pruned scan diverged from full filter: $agg vs $full")
+    assert(agg.getLong(0) > 0, "probe keys matched zero rows")
+    // strictness on the SELECTED file list, not just the touched one:
+    // re-derive the selection on the driver from the sketch bytes, and
+    // check the distributed probe the read used agrees with it
+    val hashes = keys.toDF("k").select(xxhash64(col("k"))).collect().map(_.getLong(0))
+    val selected = bloom.collect().count { r =>
+      val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("bloom")))
+      hashes.exists(bf.mightContainLong)
     }
+    val Seq((_, probe)) = graft.sources.Sinks
+      .skipManifests(spk, live, Nil, Some(("l_orderkey", keys)))
+    info(s"bloom manifest: $selected of $total files selected")
+    assert(probe.count() === selected.toLong,
+      "distributed bloom probe disagrees with the driver-side sketch test")
+    assert(selected < total,
+      s"bloom skip pruned nothing: $selected of $total files selected")
   }
 
   test("combined stats+bloom skip reads strictly fewer files than either manifest alone") {
@@ -360,239 +384,151 @@ class ScaleSpec extends SparkTestBase {
     // intersection — strictly smaller than the stats selection (the
     // stripe) and no larger than the bloom selection, still lossless.
     val spk = spark
-    import spk.implicits._
-    val table = graft.operators.Scans.rtTable("comboskip_spec")
-    try {
-      graft.sources.Sinks.writeClustered(
-        graft.sources.Tables.lineitem(spk, sf("sf0.01"))
-          .select("l_orderkey", "l_shipdate", "l_quantity"),
-        16, Seq("l_shipdate"), table)
-      graft.operators.PipelineOps.statsWriteIndex(spk, table, Seq("l_shipdate"))
-      graft.operators.PipelineOps.bloomWriteIndex(spk, table, "l_orderkey")
-      val lo = lit("1996-01-01 00:00:00").cast("timestamp")
-      val hi = lit("1996-12-31 23:59:59").cast("timestamp")
-      // keys with a guaranteed in-window shipment, so the lookup has
-      // answers; their OTHER shipments scatter across the whole span, so
-      // the bloom set is wider than the stats stripe and the intersection
-      // does real work
-      val keys = graft.sources.Tables.lineitem(spk, sf("sf0.01"))
-        .filter(col("l_shipdate").between(lo, hi))
-        .select("l_orderkey").distinct().orderBy("l_orderkey").limit(3)
-        .collect().map(_.getLong(0)).toSeq
-      val total = spk.table(s"${table}_bloom").count()
-      val statsSel = spk.table(s"${table}_stats")
-        .filter(col("l_shipdate_max") >= lo && col("l_shipdate_min") <= hi)
-        .count()
-      val bloomSel = graft.operators.PipelineOps
-        .bloomSelectFiles(spk, table, keys).size
-      val combo = graft.operators.PipelineOps
-        .comboSkipScan(spk, table, "l_orderkey", keys, "l_shipdate", lo, hi)
-      // the actual intersection the scan selects — re-derived here, NOT
-      // the post-residual touched-file count (which is a subset of any
-      // selection by construction and can't catch a manifest being
-      // ignored)
-      // normalized compare: the stats manifest is listing-rendered
-      // (file:/p, footer harvest) while bloom files are input_file_name-
-      // rendered (file:///p)
-      def normF(s: String): String =
-        new org.apache.hadoop.fs.Path(s).toUri.getPath
-      val statFileSet = spk.table(s"${table}_stats")
-        .filter(col("l_shipdate_max") >= lo && col("l_shipdate_min") <= hi)
-        .select("file").collect().map(r => normF(r.getString(0))).toSet
-      val comboSel = graft.operators.PipelineOps
-        .bloomSelectFiles(spk, table, keys).map(normF).count(statFileSet)
-      info(s"files: total=$total stats=$statsSel bloom=$bloomSel intersection=$comboSel")
-      assert(statsSel < total && bloomSel < total,
-        s"one manifest pruned nothing: stats=$statsSel bloom=$bloomSel of $total")
-      assert(comboSel < statsSel && comboSel < bloomSel,
-        s"intersection ($comboSel) not strictly below both manifests " +
-          s"(stats=$statsSel bloom=$bloomSel) — is one manifest being ignored?")
-      val agg = combo.groupBy()
-        .agg(count(lit(1)), sum((col("l_quantity") * 100).cast("long"))).head()
-      val full = spk.table(table)
-        .filter(col("l_orderkey").isin(keys: _*) &&
-          col("l_shipdate").between(lo, hi))
-        .groupBy()
-        .agg(count(lit(1)), sum((col("l_quantity") * 100).cast("long"))).head()
-      assert(agg === full,
-        s"combined prune diverged from full filter: $agg vs $full")
-      assert(agg.getLong(0) > 0, "in-window probe keys matched zero rows")
-    } finally {
-      spk.sql(s"DROP TABLE IF EXISTS `$table`")
-      spk.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
-      spk.sql(s"DROP TABLE IF EXISTS `${table}_bloom`")
-    }
+    val root = tmpRoot("comboskip_spec")
+    val li = bloomSeeded(root)
+    val lo = lit("1996-01-01 00:00:00").cast("timestamp")
+    val hi = lit("1996-12-31 23:59:59").cast("timestamp")
+    // keys with a guaranteed in-window shipment, so the lookup has
+    // answers; their OTHER shipments scatter across the whole span, so
+    // the bloom set is wider than the stats stripe and the intersection
+    // does real work
+    val keys = li.filter(col("l_shipdate").between(lo, hi))
+      .select("l_orderkey").distinct().orderBy("l_orderkey").limit(3)
+      .collect().map(_.getLong(0)).toSeq
+    val live = graft.sources.Sinks.resolveTable(spk, root)
+    val total = spk.read.parquet(s"$live/_bloom").count()
+    // the selections the combined read intersects — re-derived here from
+    // each manifest, NOT the post-residual touched-file count (which is a
+    // subset of any selection by construction and can't catch a manifest
+    // being ignored)
+    val Seq((_, statsHit), (_, bloomHit)) = graft.sources.Sinks
+      .skipManifests(spk, live, Seq(("l_shipdate", lo, hi)), Some(("l_orderkey", keys)))
+    val (statFiles, bloomFiles) = (fileSet(statsHit), fileSet(bloomHit))
+    val (statsSel, bloomSel) = (statFiles.size, bloomFiles.size)
+    val comboSel = bloomFiles.count(statFiles)
+    info(s"files: total=$total stats=$statsSel bloom=$bloomSel intersection=$comboSel")
+    assert(statsSel < total && bloomSel < total,
+      s"one manifest pruned nothing: stats=$statsSel bloom=$bloomSel of $total")
+    assert(comboSel < statsSel && comboSel < bloomSel,
+      s"intersection ($comboSel) not strictly below both manifests " +
+        s"(stats=$statsSel bloom=$bloomSel) — is one manifest being ignored?")
+    val combo = graft.sources.Sinks.readTableSkip(spk, root,
+      Seq(("l_shipdate", lo, hi)), Some(("l_orderkey", keys)))
+    val comboFiles = combo.select(input_file_name()).distinct().collect()
+      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath).toSet
+    assert(comboFiles.subsetOf(statFiles intersect bloomFiles),
+      "combined read touched a file outside the manifests' intersection")
+    val agg = combo.groupBy()
+      .agg(count(lit(1)), sum((col("l_quantity") * 100).cast("long"))).head()
+    val full = graft.sources.Sinks.readTable(spk, root)
+      .filter(col("l_orderkey").isin(keys: _*) &&
+        col("l_shipdate").between(lo, hi))
+      .groupBy()
+      .agg(count(lit(1)), sum((col("l_quantity") * 100).cast("long"))).head()
+    assert(agg === full,
+      s"combined prune diverged from full filter: $agg vs $full")
+    assert(agg.getLong(0) > 0, "in-window probe keys matched zero rows")
   }
 
   test("stats manifest refresh after append is O(batch): only new files indexed") {
-    // q_layout_skip_append's maintenance claim: the refresh lists the
-    // table location (metadata), skips every file already in the
-    // manifest, computes stats by reading ONLY the appended files, and
-    // the skip-scan still prunes the sorted base while always keeping
-    // the wide-envelope appended files.
+    // q_layout_skip_append's maintenance claim: a merge-on-read append of
+    // new keys harvests ONLY its landed files' footer envelopes into the
+    // live `_stats` (never rescanning the base), and the skip-scan still
+    // prunes the sorted base while always keeping the wide-envelope
+    // appended files. Then q_layout_optimize_inc's: OPTIMIZE restores
+    // pruning, losslessly.
     val spk = spark
-    val table = graft.operators.Scans.rtTable("zskip_app_spec")
-    val xy = graft.sources.Tables.orders(spk, sf("sf0.01"))
-      .select((col("o_custkey") % 256).as("x"),
-        (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256).as("y"),
-        col("o_totalprice"))
-    try {
-      graft.operators.PipelineOps.zWriteWithStats(
-        xy.filter(col("x") % 4 =!= 0), table)
-      val baseRows = spk.table(s"${table}_stats").collect()
-        .map(_.getString(0)).toSet
-      // idempotency: a refresh with nothing appended adds nothing
-      graft.operators.PipelineOps.statsAppendIndex(spk, table, Seq("x", "y"))
-      assert(spk.table(s"${table}_stats").count() === baseRows.size.toLong,
-        "refresh with no new files mutated the manifest")
-      xy.filter(col("x") % 4 === 0)
-        .withColumn("zkey",
-          graft.operators.PipelineOps.morton(col("x"), col("y")))
-        .repartition(2)
-        .write.format("parquet").mode("append").saveAsTable(table)
-      graft.operators.PipelineOps.statsAppendIndex(spk, table, Seq("x", "y"))
-      val after = spk.table(s"${table}_stats").collect().map(_.getString(0))
-      assert(after.length === after.distinct.length,
-        "refresh duplicated manifest rows (path-format drift?)")
-      val added = after.toSet -- baseRows
-      info(s"manifest refresh: ${baseRows.size} base rows + ${added.size} appended")
-      assert(added.size === 2,
-        s"expected exactly the 2 appended files indexed, got ${added.size}")
-      // the appended wide files are always selected; the base still prunes
-      val sel = spk.table(s"${table}_stats")
-        .filter(col("x_max") >= 32 && col("x_min") <= 47 &&
-          col("y_max") >= 96 && col("y_min") <= 111)
-        .collect().map(_.getString(0)).toSet
-      assert(added.subsetOf(sel), "wide appended files must stay selected")
-      assert(sel.size < after.length,
-        s"scan after append pruned nothing: ${sel.size} of ${after.length}")
-      val pruned = graft.operators.PipelineOps
-        .zSkipScan(spk, table, 32, 47, 96, 111)
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      val full = spk.table(table)
-        .filter(col("x").between(32, 47) && col("y").between(96, 111))
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      assert(pruned === full,
-        s"post-append skip-scan diverged from full filter: $pruned vs $full")
-      // OPTIMIZE restores pruning: the tile box over the reclustered
-      // table selects strictly fewer files than the post-append manifest
-      val opt = graft.operators.Scans.rtTable("zskip_opt_spec")
-      try {
-        graft.operators.PipelineOps.optimizeZOrdered(spk, table, opt)
-        def tileSel(t: String): Long = spk.table(s"${t}_stats")
-          .filter(col("x_max") >= 32 && col("x_min") <= 47 &&
-            col("y_max") >= 96 && col("y_min") <= 111)
-          .count()
-        val (before, afterOpt) = (tileSel(table), tileSel(opt))
-        info(s"tile-box file selection: post-append=$before optimized=$afterOpt")
-        assert(afterOpt < before,
-          s"optimize did not restore pruning: $before -> $afterOpt files")
-        val optAgg = graft.operators.PipelineOps
-          .zSkipScan(spk, opt, 32, 47, 96, 111)
-          .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-        assert(optAgg === full,
-          s"optimized skip-scan diverged from full filter: $optAgg vs $full")
-      } finally {
-        spk.sql(s"DROP TABLE IF EXISTS `$opt`")
-        spk.sql(s"DROP TABLE IF EXISTS `${opt}_stats`")
-      }
-    } finally {
-      spk.sql(s"DROP TABLE IF EXISTS `$table`")
-      spk.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
+    val root = tmpRoot("zskip_app_spec")
+    val xy = zOrdersXY()
+    graft.operators.PipelineOps.clusteredSeed(
+      xy.filter(col("x") % 4 =!= 0), root, "zkey", Seq("x", "y"))
+    val baseRows = fileSet(liveStats(root))
+    // the version's committed files: its `_files` commit log
+    def liveFiles: Set[String] = fileSet(spk.read
+      .parquet(s"${graft.sources.Sinks.resolveTable(spk, root)}/_files")
+      .filter(!col("dir")).select(col("entry").as("file")))
+    assert(baseRows === liveFiles, "seed manifest does not cover the seed files")
+    // idempotency: an append that lands nothing adds nothing
+    graft.sources.Sinks.upsertBatchDv(xy.limit(0), root, "key", "seq")
+    assert(liveStats(root).count() === baseRows.size.toLong,
+      "an empty append mutated the manifest")
+    // two arriving batches of new keys, each landing wide-envelope files
+    Seq(0, 1).foreach { half =>
+      graft.sources.Sinks.upsertBatchDv(
+        xy.filter(col("x") % 4 === 0 && col("y") % 2 === half), root, "key", "seq")
     }
+    val after = liveStats(root).select("file").collect().map(_.getString(0))
+    assert(after.length === after.distinct.length,
+      "harvest duplicated manifest rows (path-format drift?)")
+    val added = fileSet(liveStats(root)) -- baseRows
+    val landed = liveFiles -- baseRows
+    info(s"manifest harvest: ${baseRows.size} base rows + ${added.size} appended")
+    assert(landed.nonEmpty && added === landed,
+      s"expected exactly the ${landed.size} landed files indexed, got ${added.size}")
+    // the appended wide files are always selected; the base still prunes
+    val sel = fileSet(boxSel(root, ("x", 32, 47), ("y", 96, 111)))
+    assert(added.subsetOf(sel), "wide appended files must stay selected")
+    assert(sel.size < after.length,
+      s"scan after append pruned nothing: ${sel.size} of ${after.length}")
+    val full = priceSig(graft.sources.Sinks.readTable(spk, root)
+      .filter(col("x").between(32, 47) && col("y").between(96, 111)))
+    val pruned = priceSig(graft.operators.PipelineOps
+      .boxSkip(spk, root, ("x", 32, 47), ("y", 96, 111)))
+    assert(pruned === full,
+      s"post-append skip-scan diverged from full filter: $pruned vs $full")
+    // OPTIMIZE restores pruning: the tile box over the reclustered
+    // version selects strictly fewer files than the post-append manifest,
+    // where the two batches' wide files sit on top of the base's tile files
+    val before = sel.size.toLong
+    graft.sources.Sinks.optimizeClustered(spk, root, 16, Seq("zkey", "x", "y"))
+    val afterOpt = boxSel(root, ("x", 32, 47), ("y", 96, 111)).count()
+    info(s"tile-box file selection: post-append=$before optimized=$afterOpt")
+    assert(afterOpt < before,
+      s"optimize did not restore pruning: $before -> $afterOpt files")
+    val optAgg = priceSig(graft.operators.PipelineOps
+      .boxSkip(spk, root, ("x", 32, 47), ("y", 96, 111)))
+    assert(optAgg === full,
+      s"optimized skip-scan diverged from full filter: $optAgg vs $full")
   }
 
-  test("incremental optimize rewrites ONLY the delta and splices the manifest") {
-    // q_layout_optimize_inc's O(delta) claims: the recluster reads only
-    // the wide appended files, the tight base is adopted byte-for-byte
-    // (same file sizes, stats rows spliced with identical envelopes),
-    // content is conserved, and the tile box prunes again on the
-    // optimized table.
+  test("OPTIMIZE folds a streaming arrival and the tile box prunes again") {
+    // q_layout_optimize's claims: a writeBatch arrival is a `batch=` dir
+    // no manifest covers, so every skip-read reads it (wide, unpruned);
+    // the OPTIMIZE commit reclusters base + arrival into a new version
+    // whose manifest covers everything with tight envelopes, conserving
+    // content, and the tile box then reads strictly fewer files.
     val spk = spark
-    val table = graft.operators.Scans.rtTable("zskip_inc_src")
-    val opt = graft.operators.Scans.rtTable("zskip_inc_opt")
-    val xy = graft.sources.Tables.orders(spk, sf("sf0.01"))
-      .select((col("o_custkey") % 256).as("x"),
-        (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256).as("y"),
-        col("o_totalprice"))
-    try {
-      graft.operators.PipelineOps.zWriteWithStats(
-        xy.filter(col("x") % 4 =!= 0), table)
-      xy.filter(col("x") % 4 === 0)
-        .withColumn("zkey",
-          graft.operators.PipelineOps.morton(col("x"), col("y")))
-        .repartition(2)
-        .write.format("parquet").mode("append").saveAsTable(table)
-      graft.operators.PipelineOps.statsAppendIndex(spk, table, Seq("x", "y"))
-      val (adopted, rewritten) = graft.operators.PipelineOps
-        .optimizeIncremental(spk, table, opt)
-      info(s"incremental optimize: $adopted files adopted, $rewritten reclustered")
-      assert(adopted === 16 && rewritten === 2,
-        s"expected (16 adopted, 2 reclustered), got ($adopted, $rewritten)")
-      // adopted stats rows spliced with identical envelopes, keyed by the
-      // adopted file's basename (the copy keeps the name; only the
-      // directory changes)
-      def envByName(t: String, wantClustered: Boolean)
-          : Map[String, (Long, Long, Long, Long)] =
-        spk.table(s"${t}_stats").collect()
-          .filter(_.getAs[Boolean]("clustered") == wantClustered)
-          .map { r =>
-            new org.apache.hadoop.fs.Path(r.getAs[String]("file")).getName ->
-              (r.getAs[Number]("x_min").longValue,
-                r.getAs[Number]("x_max").longValue,
-                r.getAs[Number]("y_min").longValue,
-                r.getAs[Number]("y_max").longValue)
-          }.toMap
-      val srcTight = envByName(table, wantClustered = true)
-      val dstAll = envByName(opt, wantClustered = true)
-      assert(srcTight.forall { case (name, env) => dstAll.get(name).contains(env) },
-        "adopted files' spliced stats differ from the source manifest")
-      // content conserved (count + order-free checksum over all columns)
-      def sig(t: String) = spk.table(t)
-        .agg(count(lit(1)),
-          sum(pmod(xxhash64(col("x"), col("y"), col("o_totalprice"),
-            col("zkey")), lit(1000000007L))))
-        .head()
-      assert(sig(opt) === sig(table), "optimize lost or invented rows")
-      // pruning restored for the DELTA: before the optimize, every wide
-      // appended file is selected by any box (their envelopes span the
-      // domain); after, the reclustered output is z-sorted, and an
-      // aligned 16x16 tile is one contiguous z-interval — it can
-      // intersect at most 2 of the 4 range-partitioned output files.
-      // (The adopted base is untouched by design, so total selection can
-      // tie; the delta's share must strictly shrink.)
-      def tileRows(t: String) = spk.table(s"${t}_stats")
-        .filter(col("x_max") >= 32 && col("x_min") <= 47 &&
-          col("y_max") >= 96 && col("y_min") <= 111)
-        .collect()
-      val (before, after) = (tileRows(table).length, tileRows(opt).length)
-      info(s"tile-box selection: post-append=$before incremental-optimized=$after")
-      assert(after <= before,
-        s"incremental optimize worsened pruning: $before -> $after")
-      val dstOutFiles = spk.table(s"${opt}_stats").collect()
-        .count(r => !srcTight.contains(
-          new org.apache.hadoop.fs.Path(r.getAs[String]("file")).getName))
-      val newSel = tileRows(opt).count(r => !srcTight.contains(
-        new org.apache.hadoop.fs.Path(r.getAs[String]("file")).getName))
-      info(s"delta share: $newSel of $dstOutFiles reclustered files selected " +
-        s"(was ${rewritten} of ${rewritten} wide files)")
-      assert(newSel < dstOutFiles,
-        s"reclustered delta not pruned: tile selects all $dstOutFiles output files")
-      assert(newSel <= rewritten,
-        s"tile selects more reclustered files ($newSel) than the old wide count")
-      // and the skip-scan over the optimized table equals the full filter
-      val a = graft.operators.PipelineOps.zSkipScan(spk, opt, 32, 47, 96, 111)
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      val f = spk.table(table)
-        .filter(col("x").between(32, 47) && col("y").between(96, 111))
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      assert(a === f, s"optimized skip-scan diverged: $a vs $f")
-    } finally {
-      spk.sql(s"DROP TABLE IF EXISTS `$table`")
-      spk.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
-      spk.sql(s"DROP TABLE IF EXISTS `$opt`")
-      spk.sql(s"DROP TABLE IF EXISTS `${opt}_stats`")
-    }
+    val root = tmpRoot("zskip_opt_spec")
+    val xy = zOrdersXY()
+    graft.operators.PipelineOps.clusteredSeed(
+      xy.filter(col("x") % 4 =!= 0), root, "zkey", Seq("x", "y"))
+    graft.sources.Sinks.writeBatch(
+      xy.filter(col("x") % 4 === 0).repartition(2), root, 1L)
+    val live = graft.sources.Sinks.resolveTable(spk, root)
+    val arrival = new java.io.File(s"$live/batch=1").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    val before = boxSel(root, ("x", 32, 47), ("y", 96, 111)).count() + arrival
+    // content conserved (count + order-free checksum over all columns)
+    def sig = graft.sources.Sinks.readTable(spk, root)
+      .agg(count(lit(1)),
+        sum(pmod(xxhash64(col("x"), col("y"), col("o_totalprice"),
+          col("zkey")), lit(1000000007L))))
+      .head()
+    val preSig = sig
+    assert(preSig.getLong(0) === xy.count(), "the arrival is not visible")
+    graft.sources.Sinks.optimizeClustered(spk, root, 16, Seq("zkey", "x", "y"))
+    assert(sig === preSig, "optimize lost or invented rows")
+    val optLive = graft.sources.Sinks.resolveTable(spk, root)
+    assert(!new java.io.File(s"$optLive/batch=1").exists,
+      "the optimized version still carries the arrival dir")
+    val after = boxSel(root, ("x", 32, 47), ("y", 96, 111)).count()
+    info(s"tile-box files read: post-arrival=$before optimized=$after " +
+      s"($arrival arrival files always read)")
+    assert(after < before, s"optimize did not restore pruning: $before -> $after")
+    val a = priceSig(graft.operators.PipelineOps
+      .boxSkip(spk, root, ("x", 32, 47), ("y", 96, 111)))
+    val f = priceSig(xy.filter(col("x").between(32, 47) && col("y").between(96, 111)))
+    assert(a === f, s"optimized skip-scan diverged: $a vs $f")
   }
 
   test("3-D z-order: strict-subset pruning, and the third dimension prunes files on its own") {
@@ -602,110 +538,51 @@ class ScaleSpec extends SparkTestBase {
     // the 2-D envelopes alone would keep. (b) is what justifies the
     // coarser per-dimension envelopes a 3-column interleave gives.
     val spk = spark
-    val table = graft.operators.Scans.rtTable("z3skip_spec")
-    try {
-      val xyz = graft.sources.Tables.orders(spk, sf("sf0.01"))
-        .select((col("o_custkey") % 256).as("x"),
-          (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256).as("y"),
-          (col("o_orderkey") % 256).as("z"),
-          col("o_totalprice"))
-      graft.operators.PipelineOps.zWriteWithStats3(xyz, table)
-      val total = spk.table(s"${table}_stats").count()
-      def selected(zLo: Int, zHi: Int): Long = spk.table(s"${table}_stats")
-        .filter(col("x_max") >= 32 && col("x_min") <= 95 &&
-          col("y_max") >= 64 && col("y_min") <= 127 &&
-          col("z_max") >= zLo && col("z_min") <= zHi)
-        .count()
-      val with3 = selected(0, 127)
-      val without3 = selected(0, 255)
-      info(s"3-D manifest: $total files, (x,y) box keeps $without3, +z keeps $with3")
-      assert(with3 < total, "3-D skip-scan pruned nothing")
-      assert(with3 < without3,
-        s"the z envelope pruned nothing beyond (x, y): $with3 vs $without3")
-      val a = graft.operators.PipelineOps
-        .zSkipScan3(spk, table, 32, 95, 64, 127, 0, 127)
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      val b = spk.table(table)
-        .filter(col("x").between(32, 95) && col("y").between(64, 127) &&
-          col("z").between(0, 127))
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      assert(a === b, s"3-D pruned scan diverged from full filter: $a vs $b")
-      assert(a.getLong(0) > 0, "3-D box matched zero rows")
-    } finally {
-      spk.sql(s"DROP TABLE IF EXISTS `$table`")
-      spk.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
-    }
+    val root = tmpRoot("z3skip_spec")
+    val xyz = ordersXYZ()
+    graft.operators.PipelineOps.clusteredSeed(
+      xyz.withColumn("zkey3",
+        graft.operators.PipelineOps.morton3(col("x"), col("y"), col("z"))),
+      root, "zkey3", Seq("x", "y", "z"))
+    val total = liveStats(root).count()
+    def selected(zLo: Int, zHi: Int): Long =
+      boxSel(root, ("x", 32, 95), ("y", 64, 127), ("z", zLo, zHi)).count()
+    val with3 = selected(0, 127)
+    val without3 = selected(0, 255)
+    info(s"3-D manifest: $total files, (x,y) box keeps $without3, +z keeps $with3")
+    assert(with3 < total, "3-D skip-scan pruned nothing")
+    assert(with3 < without3,
+      s"the z envelope pruned nothing beyond (x, y): $with3 vs $without3")
+    val a = priceSig(graft.operators.PipelineOps
+      .boxSkip(spk, root, ("x", 32, 95), ("y", 64, 127), ("z", 0, 127)))
+    val b = priceSig(graft.sources.Sinks.readTable(spk, root)
+      .filter(col("x").between(32, 95) && col("y").between(64, 127) &&
+        col("z").between(0, 127)))
+    assert(a === b, s"3-D pruned scan diverged from full filter: $a vs $b")
+    assert(a.getLong(0) > 0, "3-D box matched zero rows")
   }
 
-  test("zero-delta incremental optimize no-ops: everything adopted, nothing reclustered") {
-    // The natural fast path of "recluster only the delta": a table whose
-    // files are ALL clustered (no appends since the last optimize) must
-    // optimize by pure adoption — zero recluster input — instead of
-    // crashing on an empty parquet path list, and the optimized table
-    // must answer the box lookup identically.
-    val spk = spark
-    val table = graft.operators.Scans.rtTable("zskip_zd_src")
-    val opt = graft.operators.Scans.rtTable("zskip_zd_opt")
-    val xy = graft.sources.Tables.orders(spk, sf("sf0.01"))
-      .select((col("o_custkey") % 256).as("x"),
-        (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256).as("y"),
-        col("o_totalprice"))
-    try {
-      graft.operators.PipelineOps.zWriteWithStats(xy, table)
-      val (adopted, reclustered) =
-        graft.operators.PipelineOps.optimizeIncremental(spk, table, opt)
-      info(s"zero-delta optimize: $adopted adopted, $reclustered reclustered")
-      assert(reclustered === 0, "zero-delta optimize reclustered files")
-      assert(adopted === 16, s"expected the 16 base files adopted, got $adopted")
-      val a = graft.operators.PipelineOps
-        .zSkipScan(spk, opt, 32, 95, 64, 127)
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      val b = spk.table(table)
-        .filter(col("x").between(32, 95) && col("y").between(64, 127))
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      assert(a === b, s"zero-delta optimized scan diverged: $a vs $b")
-    } finally {
-      Seq(table, s"${table}_stats", opt, s"${opt}_stats").foreach(t =>
-        spk.sql(s"DROP TABLE IF EXISTS `$t`"))
-    }
-  }
-
-  test("statsAppendIndex indexes a PARTITIONED table's nested files") {
-    // The latent-miss guard: a hive-partitioned table's data files live
+  test("a hive-partitioned version's _stats covers its nested files") {
+    // The latent-miss guard: a hive-partitioned version's data files live
     // in p=<v>/ subdirectories — a flat listing would silently never
     // index them and every skip-scan would prune against a stale
-    // manifest. The recursive lister must find exactly the nested files
-    // (and keep skipping _/.-hidden entries).
+    // manifest. The commit-time recursive listing must find exactly the
+    // nested files (and keep skipping _/.-hidden entries).
     val spk = spark
-    val table = graft.operators.Scans.rtTable("zskip_part_spec")
-    try {
-      val xy = graft.sources.Tables.orders(spk, sf("sf0.01"))
-        .select((col("o_custkey") % 256).as("x"),
-          (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256).as("y"),
-          (col("o_custkey") % 2).as("p"))
-      // seed the manifest empty-shaped via the clustered writer on a
-      // FLAT slice, then append a PARTITIONED batch and refresh
-      graft.sources.Sinks.writeClustered(
-        xy.filter(col("x") % 4 =!= 0).drop("p"), 4, Seq("x"), table)
-      graft.operators.PipelineOps.statsWriteIndex(spk, table, Seq("x", "y"))
-      val base = spk.table(s"${table}_stats").count()
-      // partitioned sibling table appended under the SAME location is not
-      // expressible via saveAsTable; emulate the nested layout by writing
-      // parquet subdirs directly inside the managed location
-      val loc = new org.apache.hadoop.fs.Path(
-        spk.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(table)))
-      xy.filter(col("x") % 4 === 0).drop("p").repartition(1)
-        .write.mode("overwrite").parquet(new org.apache.hadoop.fs.Path(loc, "p=0").toString)
-      graft.operators.PipelineOps.statsAppendIndex(spk, table, Seq("x", "y"))
-      val after = spk.table(s"${table}_stats").count()
-      info(s"partitioned refresh: $base base rows -> $after")
-      assert(after === base + 1,
-        s"nested p=0/ file not indexed: $base -> $after (flat-listing regression)")
-    } finally {
-      spk.sql(s"DROP TABLE IF EXISTS `$table`")
-      spk.sql(s"DROP TABLE IF EXISTS `${table}_stats`")
-    }
+    val root = tmpRoot("part_stats_spec")
+    graft.sources.Sinks.upsertBatch(
+      zOrdersXY().withColumn("p", (col("key") % 2).cast("int")),
+      root, "key", "seq", statsCols = Seq("x", "y"))
+    graft.sources.Sinks.compact(spk, root, 2, partitionCols = Seq("p"))
+    val live = graft.sources.Sinks.resolveTable(spk, root)
+    val nested = new java.io.File(live).listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("p="))
+      .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
+      .map(_.getPath).toSet
+    val manifest = fileSet(liveStats(root))
+    info(s"partitioned version: ${nested.size} nested files, ${manifest.size} manifest rows")
+    assert(nested.nonEmpty && manifest === nested,
+      s"manifest does not cover exactly the nested p=<v>/ files: $manifest vs $nested")
   }
 
   test("merge-maintained table keeps file skipping: manifest covers the live version, scan prunes strictly") {
@@ -743,7 +620,7 @@ class ScaleSpec extends SparkTestBase {
       s"manifest does not cover the live version: ${manifestFiles.size} vs ${liveFiles.size}")
     val lo = lit("1996-01-01 00:00:00").cast("timestamp")
     val hi = lit("1996-02-29 23:59:59").cast("timestamp")
-    val pruned = graft.sources.Sinks.readTableSkip(spk, root, "o_orderdate", lo, hi)
+    val pruned = graft.sources.Sinks.readTableSkip(spk, root, Seq(("o_orderdate", lo, hi)))
     val prunedFiles = pruned.select(input_file_name()).distinct().count()
     info(s"merge-skip: $prunedFiles of ${liveFiles.size} files for a 2-month window")
     assert(prunedFiles < liveFiles.size,
@@ -791,14 +668,14 @@ class ScaleSpec extends SparkTestBase {
         s"$stage: bloom manifest/file drift (${bloomFiles.size} vs ${liveFiles.size})")
       val lo = lit("1996-01-01 00:00:00").cast("timestamp")
       val hi = lit("1996-02-29 23:59:59").cast("timestamp")
-      val a = graft.sources.Sinks.readTableSkip(spk, root, "o_orderdate", lo, hi)
+      val a = graft.sources.Sinks.readTableSkip(spk, root, Seq(("o_orderdate", lo, hi)))
         .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
       val b = spk.read.parquet(live).filter(col("o_orderdate").between(lo, hi))
         .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
       assert(a === b, s"$stage: skip-scan diverged from full filter")
       // point lookup through the Bloom manifest: lossless + strict subset
       val keys = Seq(1L, 2L, 3L)
-      val bl = graft.sources.Sinks.readTableBloomSkip(spk, root, "key", keys)
+      val bl = graft.sources.Sinks.readTableSkip(spk, root, Nil, Some(("key", keys)))
       val blFiles = bl.select(input_file_name()).distinct().count()
       assert(blFiles < liveFiles.size,
         s"$stage: bloom lookup pruned nothing ($blFiles of ${liveFiles.size})")
@@ -870,36 +747,23 @@ class ScaleSpec extends SparkTestBase {
     // curve property above plus a loose tile-tightness bound: a 64x64
     // box is 1/16 of the area, 4 connected 16-file tiles cover it, so
     // selection must stay well under half the files.
-    val ht = graft.operators.Scans.rtTable("hskip_spec")
-    val zt = graft.operators.Scans.rtTable("hskip_spec_z")
-    try {
-      val xy = graft.sources.Tables.orders(spk, sf("sf0.01"))
-        .select((col("o_custkey") % 256).as("x"),
-          (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256).as("y"),
-          col("o_totalprice"))
-      graft.sources.Sinks.writeClustered(
-        graft.operators.PipelineOps.withHilbert(xy), 16, Seq("hkey"), ht)
-      graft.operators.PipelineOps.statsWriteIndex(spk, ht, Seq("x", "y"))
-      graft.operators.PipelineOps.zWriteWithStats(xy, zt)
-      def selected(t: String): Long = spk.table(s"${t}_stats")
-        .filter(col("x_max") >= 32 && col("x_min") <= 95 &&
-          col("y_max") >= 64 && col("y_min") <= 127)
-        .count()
-      val h = selected(ht)
-      val z = selected(zt)
-      info(s"box (64x64 of 256x256): hilbert selects $h of 16, morton $z of 16")
-      assert(h <= 6,
-        s"hilbert box selection lost tile-tightness: $h of 16 files")
-      val a = graft.operators.PipelineOps.zSkipScan(spk, ht, 32, 95, 64, 127)
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      val b = spk.table(ht)
-        .filter(col("x").between(32, 95) && col("y").between(64, 127))
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      assert(a === b, s"hilbert-pruned scan diverged from full filter: $a vs $b")
-    } finally {
-      Seq(ht, s"${ht}_stats", zt, s"${zt}_stats").foreach(t =>
-        spk.sql(s"DROP TABLE IF EXISTS `$t`"))
-    }
+    val root = tmpRoot("hskip_spec")
+    val zRoot = tmpRoot("hskip_spec_z")
+    graft.operators.PipelineOps.clusteredSeed(
+      graft.operators.PipelineOps.withHilbert(zOrdersXY().drop("zkey")), root,
+      "hkey", Seq("x", "y"))
+    graft.operators.PipelineOps.clusteredSeed(zOrdersXY(), zRoot, "zkey", Seq("x", "y"))
+    def selected(r: String): Long = boxSel(r, ("x", 32, 95), ("y", 64, 127)).count()
+    val h = selected(root)
+    val z = selected(zRoot)
+    info(s"box (64x64 of 256x256): hilbert selects $h of 16, morton $z of 16")
+    assert(h <= 6,
+      s"hilbert box selection lost tile-tightness: $h of 16 files")
+    val a = priceSig(graft.operators.PipelineOps
+      .boxSkip(spk, root, ("x", 32, 95), ("y", 64, 127)))
+    val b = priceSig(graft.sources.Sinks.readTable(spk, root)
+      .filter(col("x").between(32, 95) && col("y").between(64, 127)))
+    assert(a === b, s"hilbert-pruned scan diverged from full filter: $a vs $b")
   }
 
   test("manifest pruning is sound under post-commit streaming arrivals (writeBatch)") {
@@ -936,7 +800,7 @@ class ScaleSpec extends SparkTestBase {
     val fullTable = graft.sources.Sinks.readTable(spk, root)
     assert(fullTable.count() === ord.count() + 2,
       "readTable lost rows on the mixed root-files+batch-dir version")
-    val a = graft.sources.Sinks.readTableSkip(spk, root, "o_orderdate", lo, hi)
+    val a = graft.sources.Sinks.readTableSkip(spk, root, Seq(("o_orderdate", lo, hi)))
       .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
     val b = fullTable.filter(col("o_orderdate").between(lo, hi))
       .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
@@ -948,7 +812,7 @@ class ScaleSpec extends SparkTestBase {
     // point lookup for a batch-only key: no sketch covers it, the
     // unknown-files valve must surface it anyway
     val hit = graft.sources.Sinks
-      .readTableBloomSkip(spk, root, "key", Seq(9000001L))
+      .readTableSkip(spk, root, Nil, Some(("key", Seq(9000001L))))
       .select("key", "o_totalprice").collect()
     assert(hit.map(r => (r.getLong(0), r.getDouble(1))).toSet ===
       Set((9000001L, 42.0)),
@@ -961,76 +825,62 @@ class ScaleSpec extends SparkTestBase {
     // envelopes that prune a string point-lookup to a strict subset of
     // files, and the exact string residual keeps hash collisions harmless.
     val spk = spark
-    val table = graft.operators.Scans.rtTable("strskip_spec")
-    try {
-      val keyed = graft.sources.Tables.documents(spk, sf("sf0.01"))
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .withColumn("x",
-          expr(s"${graft.functions.PortableHash.spark("lang")} % 256").cast("int"))
-        .withColumn("y",
-          expr(s"${graft.functions.PortableHash.spark("source")} % 256").cast("int"))
-      graft.operators.PipelineOps.zWriteWithStats(keyed, table)
-      def slot(v: String): Int = spk.sql(
-        s"SELECT CAST(${graft.functions.PortableHash.spark(s"'$v'")} % 256 AS INT)")
-        .head().getInt(0)
-      val (hx, hy) = (slot("de"), slot("src7"))
-      val sel = spk.table(s"${table}_stats")
-        .filter(col("x_max") >= hx && col("x_min") <= hx &&
-          col("y_max") >= hy && col("y_min") <= hy)
-        .count()
-      val total = spk.table(s"${table}_stats").count()
-      info(s"string point-lookup: $sel of $total files")
-      assert(sel < total, "hashed-slot envelopes pruned nothing")
-      val a = graft.operators.PipelineOps.zSkipScan(spk, table, hx, hx, hy, hy)
-        .filter(col("lang") === "de" && col("source") === "src7")
-        .agg(count(lit(1)), sum("n_chars")).head()
-      val b = spk.table(table)
-        .filter(col("lang") === "de" && col("source") === "src7")
-        .agg(count(lit(1)), sum("n_chars")).head()
-      assert(a === b, s"string skip-scan diverged from full filter: $a vs $b")
-      assert(a.getLong(0) > 0, "probe pair missing from the fixture")
-    } finally {
-      Seq(table, s"${table}_stats").foreach(t =>
-        spk.sql(s"DROP TABLE IF EXISTS `$t`"))
-    }
+    val root = tmpRoot("strskip_spec")
+    val keyed = graft.sources.Tables.documents(spk, sf("sf0.01"))
+      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+      .withColumn("x",
+        expr(s"${graft.functions.PortableHash.spark("lang")} % 256").cast("int"))
+      .withColumn("y",
+        expr(s"${graft.functions.PortableHash.spark("source")} % 256").cast("int"))
+    graft.operators.PipelineOps.clusteredSeed(
+      keyed.withColumn("zkey", graft.operators.PipelineOps.morton(col("x"), col("y"))),
+      root, "zkey", Seq("x", "y"))
+    def slot(v: String): Int = spk.sql(
+      s"SELECT CAST(${graft.functions.PortableHash.spark(s"'$v'")} % 256 AS INT)")
+      .head().getInt(0)
+    val (hx, hy) = (slot("de"), slot("src7"))
+    val sel = boxSel(root, ("x", hx, hx), ("y", hy, hy)).count()
+    val total = liveStats(root).count()
+    info(s"string point-lookup: $sel of $total files")
+    assert(sel < total, "hashed-slot envelopes pruned nothing")
+    val a = graft.operators.PipelineOps.boxSkip(spk, root, ("x", hx, hx), ("y", hy, hy))
+      .filter(col("lang") === "de" && col("source") === "src7")
+      .agg(count(lit(1)), sum("n_chars")).head()
+    val b = graft.sources.Sinks.readTable(spk, root)
+      .filter(col("lang") === "de" && col("source") === "src7")
+      .agg(count(lit(1)), sum("n_chars")).head()
+    assert(a === b, s"string skip-scan diverged from full filter: $a vs $b")
+    assert(a.getLong(0) > 0, "probe pair missing from the fixture")
   }
 
   test("pruned skip-scan of a hive-partitioned table keeps partition values that live only in dir names") {
-    // The r17 ADVICE finding: zSkipScan read its pruned file list without
-    // a basePath, so a table whose partition values exist ONLY in
-    // directory names (p=.../part-*.parquet) silently read the partition
-    // column as NULL on the pruned path while the full scan kept it —
-    // wrong data exactly when pruning worked. readFiles now anchors every
-    // pruned read to the table's catalog location as basePath.
+    // The r17 ADVICE finding, on the versioned table protocol: a pruned
+    // read of an explicit file list without a basePath reads a column
+    // whose values exist ONLY in directory names (p=.../part-*.parquet)
+    // as NULL — the declared read schema forces the column to exist, so
+    // nothing fails loudly — while the full scan keeps it: wrong data
+    // exactly when pruning works. The skip reader anchors its committed
+    // file entries to the live version as basePath.
     val spk = spark
-    val table = graft.operators.Scans.rtTable("partskip_spec")
-    try {
-      val xy = graft.sources.Tables.orders(spk, sf("sf0.001"))
-        .select((col("o_custkey") % 256).cast("int").as("x"),
-          (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256)
-            .cast("int").as("y"),
-          (col("o_orderkey") % 4).cast("int").as("p"),
-          col("o_totalprice"))
-      spk.sql(s"DROP TABLE IF EXISTS `$table`")
-      xy.write.format("parquet").partitionBy("p").saveAsTable(table)
-      graft.operators.PipelineOps.statsWriteIndex(spk, table, Seq("x", "y"))
-      val pruned = graft.operators.PipelineOps
-        .zSkipScan(spk, table, 32, 95, 64, 127)
-      assert(pruned.filter(col("p").isNull).count() === 0,
-        "pruned read nulled the dir-only partition column")
-      val a = pruned.groupBy("p")
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long")))
-        .collect().map(_.toString).sorted.toSeq
-      val b = spk.table(table)
-        .filter(col("x").between(32, 95) && col("y").between(64, 127))
-        .groupBy("p")
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long")))
-        .collect().map(_.toString).sorted.toSeq
-      assert(a === b, s"partitioned skip-scan diverged from full filter: $a vs $b")
-    } finally {
-      Seq(table, s"${table}_stats").foreach(t =>
-        spk.sql(s"DROP TABLE IF EXISTS `$t`"))
-    }
+    val root = tmpRoot("partskip_spec")
+    graft.sources.Sinks.upsertBatch(
+      zOrdersXY("sf0.001").withColumn("p", (col("key") % 4).cast("int")),
+      root, "key", "seq", statsCols = Seq("x", "y"))
+    graft.sources.Sinks.compact(spk, root, 2, partitionCols = Seq("p"))
+    val pruned = graft.operators.PipelineOps
+      .boxSkip(spk, root, ("x", 32, 95), ("y", 64, 127))
+    assert(pruned.filter(col("p").isNull).count() === 0,
+      "pruned read nulled the dir-only partition column")
+    val a = pruned.groupBy("p")
+      .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long")))
+      .collect().map(_.toString).sorted.toSeq
+    val b = graft.sources.Sinks.readTable(spk, root)
+      .filter(col("x").between(32, 95) && col("y").between(64, 127))
+      .groupBy("p")
+      .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long")))
+      .collect().map(_.toString).sorted.toSeq
+    assert(a.nonEmpty && a === b,
+      s"partitioned skip-scan diverged from full filter: $a vs $b")
   }
 
   test("3-D hilbert key is a true Hilbert curve; its 3-D box selection is reported vs morton") {
@@ -1066,39 +916,27 @@ class ScaleSpec extends SparkTestBase {
     // (b) 3-D box locality vs 3-D Morton on the graded fixture —
     // REPORTED, not asserted (repartitionByRange cut-point jitter; the
     // flake rule), with the same loose tightness bound as the 2-D rung.
-    val ht = graft.operators.Scans.rtTable("h3skip_spec")
-    val zt = graft.operators.Scans.rtTable("h3skip_spec_z")
-    try {
-      val xyz = graft.sources.Tables.orders(spk, sf("sf0.01"))
-        .select((col("o_custkey") % 256).as("x"),
-          (datediff(to_date(col("o_orderdate")), lit("1992-01-01")) % 256).as("y"),
-          (col("o_orderkey") % 256).as("z"),
-          col("o_totalprice"))
-      graft.sources.Sinks.writeClustered(
-        graft.operators.PipelineOps.withHilbert3(xyz), 16, Seq("hkey3"), ht)
-      graft.operators.PipelineOps.statsWriteIndex(spk, ht, Seq("x", "y", "z"))
-      graft.operators.PipelineOps.zWriteWithStats3(xyz, zt)
-      def selected(t: String): Long = spk.table(s"${t}_stats")
-        .filter(col("x_max") >= 32 && col("x_min") <= 95 &&
-          col("y_max") >= 64 && col("y_min") <= 127 &&
-          col("z_max") >= 0 && col("z_min") <= 127)
-        .count()
-      val h = selected(ht)
-      val z = selected(zt)
-      info(s"3-D box (64x64x128 of 256^3): hilbert3 selects $h of 16, morton3 $z of 16")
-      assert(h <= 10,
-        s"hilbert3 box selection lost tightness: $h of 16 files")
-      val a = graft.operators.PipelineOps
-        .zSkipScan3(spk, ht, 32, 95, 64, 127, 0, 127)
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      val b = spk.table(ht)
-        .filter(col("x").between(32, 95) && col("y").between(64, 127) &&
-          col("z").between(0, 127))
-        .agg(count(lit(1)), sum((col("o_totalprice") * 100).cast("long"))).head()
-      assert(a === b, s"hilbert3-pruned scan diverged from full filter: $a vs $b")
-    } finally {
-      Seq(ht, s"${ht}_stats", zt, s"${zt}_stats").foreach(t =>
-        spk.sql(s"DROP TABLE IF EXISTS `$t`"))
-    }
+    val root = tmpRoot("h3skip_spec")
+    val zRoot = tmpRoot("h3skip_spec_z")
+    val xyz = ordersXYZ()
+    graft.operators.PipelineOps.clusteredSeed(
+      graft.operators.PipelineOps.withHilbert3(xyz), root, "hkey3", Seq("x", "y", "z"))
+    graft.operators.PipelineOps.clusteredSeed(
+      xyz.withColumn("zkey3",
+        graft.operators.PipelineOps.morton3(col("x"), col("y"), col("z"))),
+      zRoot, "zkey3", Seq("x", "y", "z"))
+    def selected(r: String): Long =
+      boxSel(r, ("x", 32, 95), ("y", 64, 127), ("z", 0, 127)).count()
+    val h = selected(root)
+    val z = selected(zRoot)
+    info(s"3-D box (64x64x128 of 256^3): hilbert3 selects $h of 16, morton3 $z of 16")
+    assert(h <= 10,
+      s"hilbert3 box selection lost tightness: $h of 16 files")
+    val a = priceSig(graft.operators.PipelineOps
+      .boxSkip(spk, root, ("x", 32, 95), ("y", 64, 127), ("z", 0, 127)))
+    val b = priceSig(graft.sources.Sinks.readTable(spk, root)
+      .filter(col("x").between(32, 95) && col("y").between(64, 127) &&
+        col("z").between(0, 127)))
+    assert(a === b, s"hilbert3-pruned scan diverged from full filter: $a vs $b")
   }
 }

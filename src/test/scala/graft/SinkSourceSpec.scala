@@ -598,7 +598,7 @@ class SinkSourceSpec extends SparkTestBase {
     val lo = lit("1990-01-01 00:00:00").cast("timestamp")
     val hi = lit("2000-12-31 23:59:59").cast("timestamp")
     val skipN = graft.sources.Sinks
-      .readTableSkip(spk, root, "o_orderdate", lo, hi).count()
+      .readTableSkip(spk, root, Seq(("o_orderdate", lo, hi))).count()
     val expectSkip = ord.filter(col("o_orderdate").between(lo, hi) &&
       col("key") % 7 =!= 0).count() + 2L * nBatches
     assert(skipN === expectSkip,
@@ -911,7 +911,7 @@ class SinkSourceSpec extends SparkTestBase {
   }
 
   test("skip-readers resolve files from the _files commit log: zero listings, sound under streaming arrivals") {
-    // The r17 scale finding: every readTableSkip/readTableBloomSkip paid a
+    // The r17 scale finding: every skip-read paid a
     // recursive fs.listFiles over the live version (a full object-store
     // LIST + O(files) driver loop per read at 100 TB). Now every commit
     // writes a `_files` manifest (the authoritative file set + schema)
@@ -938,10 +938,10 @@ class SinkSourceSpec extends SparkTestBase {
     val live = graft.sources.Sinks.resolveTable(spk, root)
     val baseKey = ord.agg(min("key")).head().getLong(0) // a key sure to exist
     def readBoth(): (Long, Set[Long]) = {
-      val n = graft.sources.Sinks.readTableSkip(spk, root, "o_orderdate", lo, hi)
+      val n = graft.sources.Sinks.readTableSkip(spk, root, Seq(("o_orderdate", lo, hi)))
         .count()
       val ks = graft.sources.Sinks
-        .readTableBloomSkip(spk, root, "key", Seq(baseKey, 9000001L))
+        .readTableSkip(spk, root, Nil, Some(("key", Seq(baseKey, 9000001L))))
         .select("key").as[Long].collect().toSet
       (n, ks)
     }
@@ -969,7 +969,7 @@ class SinkSourceSpec extends SparkTestBase {
     assert(n1 === expected, s"zero-listing skip-scan diverged: $n1 vs $expected")
     // the skip-read still PRUNES (manifest alive, not read-everything)
     val prunedFiles = graft.sources.Sinks
-      .readTableSkip(spk, root, "o_orderdate", lo, hi)
+      .readTableSkip(spk, root, Seq(("o_orderdate", lo, hi)))
       .select(input_file_name()).distinct().count()
     val allFiles = fullTable
       .select(input_file_name()).distinct().count()
@@ -1061,7 +1061,7 @@ class SinkSourceSpec extends SparkTestBase {
       "no all-null envelope produced — fixture did not isolate a null file")
     val lo = lit("1996-01-01 00:00:00").cast("timestamp")
     val hi = lit("1996-01-31 23:59:59").cast("timestamp")
-    val n = graft.sources.Sinks.readTableSkip(spk, root, "ts", lo, hi).count()
+    val n = graft.sources.Sinks.readTableSkip(spk, root, Seq(("ts", lo, hi))).count()
     val expected = graft.sources.Sinks.readTable(spk, root)
       .filter(col("ts").between(lo, hi)).count()
     assert(n === expected && n === 70L,
@@ -1104,14 +1104,14 @@ class SinkSourceSpec extends SparkTestBase {
     val lo = lit("1996-01-01 00:00:00").cast("timestamp")
     val hi = lit("1996-06-30 23:59:59").cast("timestamp")
     val skipN = graft.sources.Sinks
-      .readTableSkip(spk, root, "o_orderdate", lo, hi).count()
+      .readTableSkip(spk, root, Seq(("o_orderdate", lo, hi))).count()
     val fullN = graft.sources.Sinks.readTable(spk, root)
       .filter(col("o_orderdate").between(lo, hi)).count()
     assert(skipN === fullN, s"skip-read disagrees with MOR readTable: $skipN vs $fullN")
     val deadKey = ord.filter(col("key") % 7 === 0)
       .agg(min("key")).head().getLong(0)
     assert(graft.sources.Sinks
-      .readTableBloomSkip(spk, root, "key", Seq(deadKey)).count() === 0,
+      .readTableSkip(spk, root, Nil, Some(("key", Seq(deadKey)))).count() === 0,
       "bloom point lookup resurrected a deleted key")
     // accumulation: a second vector composes
     graft.sources.Sinks.deleteWhere(spk, root, col("key") % 11 === 0)
@@ -1192,7 +1192,7 @@ class SinkSourceSpec extends SparkTestBase {
     val lo = lit("1996-01-01 00:00:00").cast("timestamp")
     val hi = lit("1996-06-30 23:59:59").cast("timestamp")
     val skipN = graft.sources.Sinks
-      .readTableSkip(spk, root, "o_orderdate", lo, hi).count()
+      .readTableSkip(spk, root, Seq(("o_orderdate", lo, hi))).count()
     val fullN = merged.filter(col("o_orderdate").between(lo, hi)).count()
     assert(skipN === fullN, s"skip-read disagrees after MOR merge: $skipN vs $fullN")
     // replay: same batch again → same visible rows (convergence)
@@ -1368,7 +1368,7 @@ class SinkSourceSpec extends SparkTestBase {
     val inRange = ord.filter(col("o_orderdate").between(lo, hi)).count()
     val fullTorn = graft.sources.Sinks.readTable(spk, root).count()
     val skipTorn = graft.sources.Sinks
-      .readTableSkip(spk, root, "o_orderdate", lo, hi).count()
+      .readTableSkip(spk, root, Seq(("o_orderdate", lo, hi))).count()
     assert(fullTorn === total + 5, "full reader must see the torn batch")
     assert(skipTorn === inRange,
       "commit-log skip-reader must NOT see the unlogged batch")
@@ -1377,7 +1377,7 @@ class SinkSourceSpec extends SparkTestBase {
     graft.sources.Sinks.writeBatch(batch.toDF(), root, 3L)
     val fullAfter = graft.sources.Sinks.readTable(spk, root).count()
     val skipAfter = graft.sources.Sinks
-      .readTableSkip(spk, root, "o_orderdate", lo, hi).count()
+      .readTableSkip(spk, root, Seq(("o_orderdate", lo, hi))).count()
     assert(fullAfter === total + 5 && skipAfter === inRange + 5,
       s"reader families disagree after replay: full=$fullAfter skip=$skipAfter")
   }
@@ -1414,7 +1414,7 @@ class SinkSourceSpec extends SparkTestBase {
     val inRange = ord.filter(col("o_orderdate").between(lo, hi)).count()
     graft.sources.Sinks.valveListings.set(0L)
     val skipN = graft.sources.Sinks
-      .readTableSkip(spk, root, "o_orderdate", lo, hi).count()
+      .readTableSkip(spk, root, Seq(("o_orderdate", lo, hi))).count()
     assert(skipN === inRange + 2L * nBatches,
       s"skip-read lost rows across the log compaction: $skipN")
     assert(graft.sources.Sinks.valveListings.get() === 0L,
@@ -1465,7 +1465,7 @@ class SinkSourceSpec extends SparkTestBase {
     val inRange = ord.filter(col("o_orderdate").between(lo, hi)).count()
     graft.sources.Sinks.valveListings.set(0L)
     assert(graft.sources.Sinks
-      .readTableSkip(spk, root, "o_orderdate", lo, hi).count() === inRange + 4L,
+      .readTableSkip(spk, root, Seq(("o_orderdate", lo, hi))).count() === inRange + 4L,
       "healed log lost rows")
     assert(graft.sources.Sinks.valveListings.get() === 0L,
       "healed log still paying the listing valve")
@@ -1510,7 +1510,7 @@ class SinkSourceSpec extends SparkTestBase {
     val inRange = ord.filter(col("o_orderdate").between(lo, hi)).count()
     graft.sources.Sinks.valveListings.set(0L)
     assert(graft.sources.Sinks
-      .readTableSkip(spk, root, "o_orderdate", lo, hi).count() === inRange,
+      .readTableSkip(spk, root, Seq(("o_orderdate", lo, hi))).count() === inRange,
       "skip read over harvested manifests lost rows")
     assert(graft.sources.Sinks.valveListings.get() === 0L)
     // bloom point lookup finds the UPDATED row (it lives in a landed,
@@ -1518,7 +1518,7 @@ class SinkSourceSpec extends SparkTestBase {
     val probeKey = ord.filter(col("key") % 10 === 0)
       .select("key").as[Long].head()
     val hit = graft.sources.Sinks
-      .readTableBloomSkip(spk, root, "key", Seq(probeKey))
+      .readTableSkip(spk, root, Nil, Some(("key", Seq(probeKey))))
     assert(hit.count() === 1L, "bloom lookup lost the MOR-updated row")
     val orig = ord.filter(col("key") === probeKey)
       .select("o_totalprice").as[Double].head()
